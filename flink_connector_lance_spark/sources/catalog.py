@@ -21,7 +21,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..options import S3Options, is_s3_path
+from ..options import S3Options
 from . import fragments as FR
 from .reader import read_dataset
 
@@ -41,48 +41,40 @@ class DatasetCatalog:
     mirrored from ref table/LanceCatalogS3Test.java) carry the mapped
     ``aws_*`` storage options (ref table/LanceCatalogFactory.java:148-176,
     applied at table/LanceCatalog.java:743-773) for the native Lance
-    layer. On the emulated backend, S3 support is gated on fsspec/s3fs
-    (sources/fs.py): listing/detection/manifests go through fsspec, data
-    reads go through the Python DataSource whose workers open fragments
-    via fsspec with these credentials, and the lifecycle mutations
-    (create/drop database, drop table) run through the same plane — a
-    database is a key prefix pinned by a zero-byte ``.database`` marker,
-    a drop is a recursive prefix delete. This is parity-PLUS: the
-    reference advertises the S3 catalog (LanceCatalog.java:77-96) but
-    its own mutations would fail there (``Paths.get``/``Files.move`` on
-    an s3 URI, :518/:549). ``rename_table`` stays a loud refusal on
-    s3:// — object stores have no atomic multi-key rename, and a
-    copy+delete window that can lose a concurrent commit is worse than
-    an error. When fsspec is absent every remote call degrades with the
-    same clear error."""
+    layer. Every lifecycle operation is one function over the filesystem
+    seam (sources/fs.py), so a local directory and an s3 prefix behave
+    the same: listing/detection/manifests go through the seam, a
+    database is a directory pinned by a zero-byte ``.database`` marker
+    (on s3, a key prefix the marker brings into existence), and a drop
+    is a recursive (prefix) delete. Remote data reads go through the
+    Python DataSource, whose workers open fragments via fsspec with these
+    credentials. This is parity-PLUS: the reference advertises the S3
+    catalog (LanceCatalog.java:77-96) but its own mutations would fail
+    there (``Paths.get``/``Files.move`` on an s3 URI, :518/:549).
+    ``rename_table`` stays a loud refusal on s3:// — object stores have
+    no atomic multi-key rename, and a copy+delete window that can lose a
+    concurrent commit is worse than an error. When fsspec is absent
+    every remote call degrades with the same clear error."""
 
     def __init__(self, warehouse: str, default_database: str = "default",
                  s3: S3Options | None = None):
+        from .fs import is_remote
+
         self.warehouse = warehouse
         self.default_database = default_database
         self.s3 = s3
-        self.is_remote = is_s3_path(warehouse)
-        self.storage_options = (s3 or S3Options()).to_storage_options() if self.is_remote else {}
-        if not self.is_remote:
+        self.is_remote = is_remote(warehouse)
+        if self.is_remote:
+            # credentials only: an s3 warehouse is not touched until an
+            # operation needs it (and refuses clearly without fsspec)
+            self.storage_options = (s3 or S3Options()).to_storage_options()
+        else:
+            self.storage_options = {}
             os.makedirs(os.path.join(warehouse, default_database), exist_ok=True)
 
-    def _refuse_remote_rename(self) -> None:
-        """rename_table stays local-only: object stores have no atomic
-        multi-key rename — a copy+delete emulation leaves a window where
-        a concurrent writer's commit lands in the doomed prefix and is
-        silently lost. Say so instead (create/drop DO work remotely)."""
-        if self.is_remote:
-            raise Unsupported(
-                "rename_table on an S3 warehouse: object stores have no "
-                "atomic rename, and a copy+delete emulation can lose a "
-                "concurrent commit — copy to a new table "
-                "(write_dataset(get_table(...), new_path)) and drop_table "
-                "the old one instead"
-            )
-
     def _fs(self):
-        """fsspec filesystem for a remote warehouse, or a clear refusal
-        when fsspec/s3fs is absent (the pre-round-5 behavior)."""
+        """The warehouse's filesystem (sources/fs.py), or a clear refusal
+        when a remote warehouse has no fsspec/s3fs."""
         from .fs import RemoteUnavailableError, get_fs
 
         try:
@@ -96,38 +88,27 @@ class DatasetCatalog:
         return os.path.join(self.warehouse, db)
 
     def list_databases(self) -> list[str]:
-        if self.is_remote:
-            from .fs import remote_ls_names
+        from .fs import ls_names
 
-            fs = self._fs()
-            return sorted(
-                d for d in remote_ls_names(fs, self.warehouse)
-                if fs.isdir(self._db_path(d))
-            )
+        fs = self._fs()
         return sorted(
-            d for d in os.listdir(self.warehouse)
-            if os.path.isdir(self._db_path(d))
+            d for d in ls_names(fs, self.warehouse)
+            if fs.isdir(self._db_path(d))
         )
 
     def database_exists(self, db: str) -> bool:
-        if self.is_remote:
-            return bool(self._fs().isdir(self._db_path(db)))
-        return os.path.isdir(self._db_path(db))
+        return bool(self._fs().isdir(self._db_path(db)))
 
     def create_database(self, db: str, ignore_if_exists: bool = False) -> None:
         if self.database_exists(db):
             if ignore_if_exists:
                 return
             raise CatalogError(f"database already exists: {db}")
-        if self.is_remote:
-            # object stores have no directories: the database is a key
-            # prefix, pinned into existence (and into isdir/listings) by
-            # a zero-byte marker object
-            with self._fs().open(self._db_path(db) + "/.database",
-                                 "wb") as fh:
-                fh.write(b"")
-            return
-        os.makedirs(self._db_path(db))
+        # object stores have no directories: the database is a key prefix,
+        # pinned into existence (and into isdir/listings) by a zero-byte
+        # marker object; a local database gets the same marker
+        with self._fs().open(self._db_path(db) + "/.database", "wb") as fh:
+            fh.write(b"")
 
     def drop_database(self, db: str, ignore_if_not_exists: bool = False,
                       cascade: bool = False) -> None:
@@ -137,12 +118,8 @@ class DatasetCatalog:
             raise CatalogError(f"database does not exist: {db}")
         if self.list_tables(db) and not cascade:
             raise CatalogError(f"database not empty: {db}")
-        if self.is_remote:
-            # recursive prefix delete (s3fs: one bulk delete of every
-            # key under the prefix)
-            self._fs().rm(self._db_path(db), recursive=True)
-            return
-        shutil.rmtree(self._db_path(db))
+        # recursive prefix delete (s3fs: one bulk delete of every key)
+        self._fs().rm(self._db_path(db), recursive=True)
 
     # -- tables (ref LanceCatalog.java:379-593) -----------------------------
 
@@ -150,29 +127,19 @@ class DatasetCatalog:
         return os.path.join(self.warehouse, db, table)
 
     def list_tables(self, db: str | None = None) -> list[str]:
+        from .fs import ls_names
+
         db = db or self.default_database
         if not self.database_exists(db):
             raise CatalogError(f"database does not exist: {db}")
-        if self.is_remote:
-            from .fs import remote_ls_names
-
-            # bind once: doubles as the clear refusal when fsspec is
-            # absent, and non-caching fsspec impls pay setup only once
-            fs = self._fs()
-            return sorted(
-                t for t in remote_ls_names(fs, self._db_path(db))
-                if FR.is_dataset(self._table_path(db, t), self.storage_options)
-            )
         return sorted(
-            t for t in os.listdir(self._db_path(db))
-            if FR.is_dataset(self._table_path(db, t))
+            t for t in ls_names(self._fs(), self._db_path(db))
+            if FR.is_dataset(self._table_path(db, t), self.storage_options)
         )
 
     def table_exists(self, db: str, table: str) -> bool:
-        if self.is_remote:
-            self._fs()  # clear refusal when fsspec is absent
-            return FR.is_dataset(self._table_path(db, table), self.storage_options)
-        return FR.is_dataset(self._table_path(db, table))
+        self._fs()  # clear refusal when a remote warehouse has no fsspec
+        return FR.is_dataset(self._table_path(db, table), self.storage_options)
 
     def table_location(self, db: str, table: str) -> str:
         return self._table_path(db, table)
@@ -182,15 +149,21 @@ class DatasetCatalog:
             if ignore_if_not_exists:
                 return
             raise CatalogError(f"table does not exist: {db}.{table}")
-        if self.is_remote:
-            self._fs().rm(self._table_path(db, table), recursive=True)
-            return
-        shutil.rmtree(self._table_path(db, table))
+        self._fs().rm(self._table_path(db, table), recursive=True)
 
     def rename_table(self, db: str, table: str, new_name: str) -> None:
         """Filesystem move (ref LanceCatalog.java:560-578). Loud refusal
-        on s3:// — no atomic multi-key rename exists there."""
-        self._refuse_remote_rename()
+        on s3:// — object stores have no atomic multi-key rename, and a
+        copy+delete emulation leaves a window where a concurrent writer's
+        commit lands in the doomed prefix and is silently lost."""
+        if self.is_remote:
+            raise Unsupported(
+                "rename_table on an S3 warehouse: object stores have no "
+                "atomic rename, and a copy+delete emulation can lose a "
+                "concurrent commit — copy to a new table "
+                "(write_dataset(get_table(...), new_path)) and drop_table "
+                "the old one instead"
+            )
         if not self.table_exists(db, table):
             raise CatalogError(f"table does not exist: {db}.{table}")
         dst = self._table_path(db, new_name)

@@ -125,40 +125,27 @@ def sha256_of(path: str, fs=None) -> str:
 
 
 def is_dataset(path: str, storage_options: dict | None = None) -> bool:
-    """Table detection by _versions/ (ref table/LanceCatalog.java:492-493).
-    Works for S3 paths too when fsspec is importable (sources/fs.py)."""
-    from .fs import get_fs, is_remote
+    """Table detection by _versions/ (ref table/LanceCatalog.java:492-493),
+    on any filesystem the seam serves (sources/fs.py)."""
+    from .fs import get_fs
 
-    if is_remote(path):
-        fs = get_fs(path, storage_options)
-        return bool(fs.exists(f"{str(path).rstrip('/')}/{VERSIONS_DIR}"))
-    return os.path.isdir(os.path.join(path, VERSIONS_DIR))
+    fs = get_fs(path, storage_options)
+    return bool(fs.isdir(f"{str(path).rstrip('/')}/{VERSIONS_DIR}"))
 
 
 def _manifest_path(root: str, version: int) -> str:
-    from .fs import is_remote
-
-    if is_remote(root):
-        return f"{str(root).rstrip('/')}/{VERSIONS_DIR}/{version}.manifest.json"
-    return os.path.join(root, VERSIONS_DIR, f"{version}.manifest.json")
+    return f"{str(root).rstrip('/')}/{VERSIONS_DIR}/{version}.manifest.json"
 
 
 def latest_version(root: str, storage_options: dict | None = None) -> int | None:
     """Highest manifest version. Recognizes both the emulated naming
     (``N.manifest.json``) and the native Lance naming (``N.manifest`` —
     the convention of the reference's checked-in fixtures,
-    test-data/lance-db1/_versions/1.manifest). Remote (s3://) roots list
-    through fsspec (metadata-plane reads only — sources/fs.py)."""
-    from .fs import get_fs, is_remote, remote_ls_names
+    test-data/lance-db1/_versions/1.manifest)."""
+    from .fs import get_fs, ls_names
 
-    if is_remote(root):
-        fs = get_fs(root, storage_options)
-        names = remote_ls_names(fs, f"{str(root).rstrip('/')}/{VERSIONS_DIR}")
-    else:
-        vdir = os.path.join(root, VERSIONS_DIR)
-        if not os.path.isdir(vdir):
-            return None
-        names = os.listdir(vdir)
+    names = ls_names(get_fs(root, storage_options),
+                     f"{str(root).rstrip('/')}/{VERSIONS_DIR}")
     versions = [
         int(name.split(".")[0])
         for name in names
@@ -169,25 +156,18 @@ def latest_version(root: str, storage_options: dict | None = None) -> int | None
 
 def read_manifest(root: str, version: int | None = None,
                   storage_options: dict | None = None) -> Manifest:
-    from .fs import get_fs, is_remote
+    from .fs import get_fs
 
-    remote = is_remote(root)
     v = latest_version(root, storage_options) if version is None else version
     if v is None:
         raise FileNotFoundError(f"not a dataset (no {VERSIONS_DIR}/): {root}")
     path = _manifest_path(root, v)
-    if remote:
-        fs = get_fs(root, storage_options)
-        if not fs.exists(path) and fs.exists(path.removesuffix(".json")):
-            raise LanceUnavailableError(f"reading native manifest {v}.manifest")
-        with fs.open(path, "r") as fh:
-            raw = json.load(fh)
-    else:
-        if not os.path.exists(path) and os.path.exists(path.removesuffix(".json")):
-            # native Lance binary manifest: layout-compatible but needs the lib
-            raise LanceUnavailableError(f"reading native manifest {v}.manifest")
-        with open(path) as fh:
-            raw = json.load(fh)
+    fs = get_fs(root, storage_options)
+    if not fs.exists(path) and fs.exists(path.removesuffix(".json")):
+        # native Lance binary manifest: layout-compatible but needs the lib
+        raise LanceUnavailableError(f"reading native manifest {v}.manifest")
+    with fs.open(path, "rb") as fh:
+        raw = json.load(fh)
     return Manifest(
         version=raw["version"],
         fragments=[FragmentInfo(**f) for f in raw["fragments"]],
@@ -214,7 +194,9 @@ def read_manifest_compat(root: str, version: int | None = None,
 
         mf = LF.read_native_manifest(root, version, storage_options)
         stats = LF.read_native_stats(root, mf.version, storage_options)
-        meta = {"native_lance": True, "native_fields": mf.fields}
+        meta = {"native_lance": True, "native_fields": mf.fields,
+                "native_format": {"writer_version": mf.writer_version,
+                                  "data_format": mf.data_format}}
         meta.update(native_config_meta(mf))
         return Manifest(
             version=mf.version,
@@ -293,20 +275,14 @@ def commit(root: str, new_fragments: list[FragmentInfo], mode: str = "append",
     their fragments and meta were computed FROM a snapshot, so landing
     them on a different head double-applies the delta.
 
-    Remote (s3://) roots commit through ``fs.create_exclusive`` — an S3
-    conditional PUT (``If-None-Match: *``) of the manifest key, which
-    gives the same single-winner guarantee as the local O_EXCL create;
-    pass the warehouse credentials via ``storage_options``."""
-    from .fs import create_exclusive, get_fs, is_remote
+    The manifest lands through ``fs.create_exclusive`` — O_EXCL
+    locally, an S3 conditional PUT (``If-None-Match: *``) on s3 — so the
+    single-winner guarantee is the same on every filesystem; pass the
+    warehouse credentials via ``storage_options``."""
+    from .fs import create_exclusive, get_fs
 
-    remote_fs = None
-    if is_remote(root):
-        remote_fs = get_fs(root, storage_options)
-        mk = getattr(remote_fs, "makedirs", None)
-        if mk is not None:  # object stores have no dirs; local-backed fakes do
-            mk(os.path.join(root, VERSIONS_DIR), exist_ok=True)
-    else:
-        os.makedirs(os.path.join(root, VERSIONS_DIR), exist_ok=True)
+    fs = get_fs(root, storage_options)
+    fs.makedirs(f"{str(root).rstrip('/')}/{VERSIONS_DIR}", exist_ok=True)
     for _ in range(max_retries):
         prev_v = latest_version(root, storage_options)
         if expected_base_version is not None and prev_v != expected_base_version:
@@ -351,19 +327,11 @@ def commit(root: str, new_fragments: list[FragmentInfo], mode: str = "append",
             {"version": next_v, "fragments": [asdict(f) for f in manifest.fragments],
              "meta": manifest.meta}
         )
-        if remote_fs is not None:
-            try:
-                create_exclusive(remote_fs, _manifest_path(root, next_v),
-                                 payload.encode("utf-8"))
-            except FileExistsError:
-                continue  # another writer won this version; re-read and retry
-            return manifest
         try:
-            fd = os.open(_manifest_path(root, next_v), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            create_exclusive(fs, _manifest_path(root, next_v),
+                             payload.encode("utf-8"))
         except FileExistsError:
             continue  # another writer won this version; re-read and retry
-        with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
         return manifest
     raise RuntimeError(f"commit conflict: gave up after {max_retries} retries at {root}")
 

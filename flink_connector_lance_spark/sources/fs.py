@@ -1,44 +1,68 @@
-"""Remote-filesystem shim for the READ path of S3 warehouses.
+"""The filesystem seam: the one module that knows where a dataset lives.
 
-The reference maps ``s3-*`` catalog options to object-store credentials
-and hands them to the native Lance layer (ref
-table/LanceCatalogFactory.java:148-176, applied at
-table/LanceCatalog.java:743-773). The emulated parquet backend is
-filesystem-based, so S3 support here is gated on ``fsspec``/``s3fs``
-being importable:
+``get_fs(path, storage_options)`` returns a filesystem with the fsspec
+interface for ANY dataset path, and every metadata and maintenance
+operation (manifest list/read/commit, catalog lifecycle, vacuum,
+describe, deletion vectors, the native stats sidecar) is one function
+over it:
 
-- **metadata plane** (manifest listing/reads, table detection) goes
-  through ``fsspec`` directly — a handful of tiny JSON reads;
-- **data plane** reads go through the Python DataSource
-  (``format("lance")``): its ``read()`` already runs inside Python
-  workers over pyarrow, so each worker opens its fragment through
-  ``fsspec`` with the mapped credentials — no JVM hadoop-aws jars
-  needed, and the per-fragment partitioning / zone-map pruning are
-  unchanged;
-- **writes** are executor-direct: each task PUTs its fragment files
-  straight to ``s3://…/data/`` through fsspec (writer._write_remote —
-  data bytes never touch the driver), then the driver commits the
-  manifest through ``create_exclusive`` — on s3fs an S3 conditional PUT
-  (``If-None-Match: *``), giving the same single-winner semantics as
-  the local ``O_EXCL`` path. Backends without exclusive-create keep
-  the old clear refusal (a lost-update window is worse than an error);
-- **maintenance** (DELETE/MERGE/compact) runs executor-direct too — a
-  file-attributed probe plus a partition-pruned rescan whose tasks PUT
-  rewritten fragments straight to s3 (sources/maintenance.py
-  _delete_remote/_merge_remote/_compact_remote), and **vacuum**
-  garbage-collects dead keys from listings alone (_vacuum_remote).
+- ``s3://`` / ``s3a://`` / ``s3n://`` paths get fsspec's ``s3``
+  filesystem with the reference-convention ``aws_*`` storage options
+  mapped onto s3fs kwargs (ref table/LanceCatalogFactory.java:148-176,
+  applied at table/LanceCatalog.java:743-773). fsspec/s3fs are
+  optional: without them every remote call raises
+  ``RemoteUnavailableError``, a clear refusal;
+- every other path gets ``LocalFS``, a small stateless filesystem over
+  ``os``/``shutil``.
 
-Without fsspec installed, every remote call degrades to the same clear
-error the catalog always raised.
+The operations both expose, all taking FULL paths/urls: ``open`` (mode
+``'xb'`` is an exclusive create), ``exists``, ``isdir``, ``ls``,
+``info`` (with ``size`` and ``mtime``; s3fs reports ``LastModified``),
+``rm(recursive=)``, ``makedirs`` and ``put``. Writing modes create
+missing parent directories (object stores have none to create).
+
+Two module-level primitives carry the durability contract:
+
+- ``create_exclusive(fs, url, payload)`` — atomic create-if-absent with
+  a single-winner guarantee: of N concurrent creators of one key exactly
+  one succeeds and the rest get ``FileExistsError``. Locally it is an
+  ``O_CREAT|O_EXCL`` create; on s3 an S3 conditional PUT
+  (``If-None-Match: *``). Every manifest commit lands through it;
+- ``write_atomic(fs, url, payload)`` — a small object that is either
+  absent or complete, never torn: tmp+rename locally, a single PUT
+  remotely (a PUT is atomic per key).
+
+``ls_names(fs, path)`` lists base names (``[]`` for a missing dir) and
+``dataset_root(path)`` is the canonical root string of a dataset.
+
+One location fork is left outside this module: the emulated data-plane
+writer. Locally a JVM ``df.write.parquet`` stages files that the driver
+promotes by rename; on s3 each task PUTs its fragment straight from the
+executor. The JVM cannot write to s3 without hadoop-aws, and for tiny
+local commits the staged write measured faster (about 0.21 s vs
+0.31 s per append), so both stay. ``is_remote`` is exposed for that
+dispatch, for vacuum's young-key grace (only object stores need it) and
+for the catalog's refusal to rename on s3 (no atomic multi-key rename).
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 _REMOTE_SCHEMES = ("s3://", "s3a://", "s3n://")
 
 
 def is_remote(path: str) -> bool:
     return str(path).lower().startswith(_REMOTE_SCHEMES)
+
+
+def dataset_root(path: str) -> str:
+    """Canonical root of a dataset: an absolute path locally (executor
+    outputs such as ``input_file_name()`` are absolute, and a relative
+    root would resolve against the JVM's cwd), the url without a
+    trailing slash remotely."""
+    return str(path).rstrip("/") if is_remote(path) else os.path.abspath(path)
 
 
 class RemoteUnavailableError(RuntimeError):
@@ -48,6 +72,56 @@ class RemoteUnavailableError(RuntimeError):
             "install s3fs) for the emulated backend, or the native lance "
             "backend; neither is available"
         )
+
+
+class LocalFS:
+    """The local half of the seam: the fsspec calls the engine uses,
+    over ``os``/``shutil``. Stateless, so one instance serves every
+    path (and pickles into executor closures)."""
+
+    def open(self, path, mode="rb"):
+        if "w" in mode or "x" in mode or "a" in mode:
+            os.makedirs(os.path.dirname(str(path)) or ".", exist_ok=True)
+        return open(path, mode)  # 'xb' is O_CREAT|O_EXCL
+
+    def exists(self, path) -> bool:
+        return os.path.exists(path)
+
+    def isdir(self, path) -> bool:
+        return os.path.isdir(path)
+
+    def ls(self, path, detail=False):
+        base = str(path).rstrip("/")
+        return [f"{base}/{n}" for n in sorted(os.listdir(path))]
+
+    def info(self, path) -> dict:
+        st = os.stat(path)  # FileNotFoundError when absent, like fsspec
+        return {"name": str(path), "size": st.st_size, "mtime": st.st_mtime,
+                "type": "directory" if os.path.isdir(path) else "file"}
+
+    def rm(self, path, recursive: bool = False) -> None:
+        if os.path.isdir(path):
+            if not recursive:
+                raise IsADirectoryError(str(path))
+            shutil.rmtree(path)
+        else:
+            os.remove(path)
+
+    def makedirs(self, path, exist_ok=False) -> None:
+        os.makedirs(path, exist_ok=exist_ok)
+
+    def put(self, lpath, rpath) -> None:
+        os.makedirs(os.path.dirname(str(rpath)) or ".", exist_ok=True)
+        shutil.copyfile(lpath, rpath)
+
+    def write_atomic(self, path, payload: bytes) -> None:
+        tmp = f"{path}.tmp"
+        with self.open(tmp, "wb") as fh:
+            fh.write(payload)
+        os.replace(tmp, path)
+
+
+_LOCAL_FS = LocalFS()
 
 
 def _fsspec_kwargs(storage_options: dict | None) -> dict:
@@ -75,10 +149,12 @@ def _fsspec_kwargs(storage_options: dict | None) -> dict:
 
 
 def get_fs(path: str, storage_options: dict | None = None):
-    """An fsspec filesystem for a remote path, or a clear error. All fs
-    calls take FULL urls (s3fs strips the protocol itself)."""
+    """The filesystem serving ``path``: ``LocalFS`` for local paths,
+    fsspec's s3 filesystem for s3 urls (or a clear error when fsspec/s3fs
+    is absent). All fs calls take FULL urls (s3fs strips the protocol
+    itself)."""
     if not is_remote(path):
-        raise ValueError(f"get_fs is for remote paths, got {path!r}")
+        return _LOCAL_FS
     try:
         import fsspec
     except ImportError as e:
@@ -93,18 +169,18 @@ def get_fs(path: str, storage_options: dict | None = None):
 
 
 def create_exclusive(fs, url: str, payload: bytes) -> None:
-    """Atomic create-if-absent of one remote object — the primitive the
-    single-winner commit protocol needs (the remote twin of the local
-    ``O_CREAT|O_EXCL`` manifest write).
+    """Atomic create-if-absent of one object — the primitive the
+    single-winner commit protocol needs.
 
     Delegates to the filesystem's exclusive-write mode (``open(path,
-    'xb')``): s3fs implements it with an S3 conditional PUT
-    (``If-None-Match: *`` — S3's 2024 conditional-write API), so exactly
-    one of N concurrent writers can create a given manifest key and the
-    losers get ``FileExistsError`` (raised at close, when the PUT's
-    precondition is evaluated). ``FileExistsError`` propagates to the
-    caller's retry loop; a backend without exclusive-create support gets
-    a clear refusal instead of a lost-update window."""
+    'xb')``): ``O_CREAT|O_EXCL`` locally; s3fs implements it with an S3
+    conditional PUT (``If-None-Match: *`` — S3's 2024 conditional-write
+    API), so exactly one of N concurrent writers can create a given
+    manifest key and the losers get ``FileExistsError`` (raised at
+    close, when the PUT's precondition is evaluated). ``FileExistsError``
+    propagates to the caller's retry loop; a backend without
+    exclusive-create support gets a clear refusal instead of a
+    lost-update window."""
     try:
         f = fs.open(url, "xb")
     except FileExistsError:
@@ -120,11 +196,24 @@ def create_exclusive(fs, url: str, payload: bytes) -> None:
         f.write(payload)
 
 
-def remote_ls_names(fs, path: str) -> list[str]:
-    """Base names of a remote directory's entries (s3fs.ls returns
-    bucket-relative or protocol-full paths depending on version)."""
+def write_atomic(fs, url: str, payload: bytes) -> None:
+    """Write one small object so readers see it absent or complete:
+    tmp+rename on filesystems that offer it, else one PUT (atomic per
+    key on object stores)."""
+    atomic = getattr(fs, "write_atomic", None)
+    if atomic is not None:
+        atomic(url, payload)
+        return
+    with fs.open(url, "wb") as fh:
+        fh.write(payload)
+
+
+def ls_names(fs, path: str) -> list[str]:
+    """Base names of a directory's entries, ``[]`` when it is missing
+    (s3fs.ls returns bucket-relative or protocol-full paths depending on
+    version)."""
     try:
         entries = fs.ls(path, detail=False)
-    except FileNotFoundError:
+    except (FileNotFoundError, NotADirectoryError):
         return []
     return [str(e).rstrip("/").rsplit("/", 1)[-1] for e in entries]

@@ -342,26 +342,17 @@ def _open_binary(path: str, storage_options: dict | None = None):
     read plane works over object storage with the credentials the
     caller mapped (the reference's own S3 story is native lance —
     ref table/LanceCatalogFactory.java:77-111)."""
-    from .fs import get_fs, is_remote
+    from .fs import get_fs
 
-    if is_remote(path):
-        return get_fs(path, storage_options).open(path, "rb")
-    return open(path, "rb")
+    return get_fs(path, storage_options).open(path, "rb")
 
 
 def native_manifest_versions(root: str,
                              storage_options: dict | None = None) -> list[int]:
-    from .fs import get_fs, is_remote
+    from .fs import get_fs, ls_names
 
-    vdir = os.path.join(root, VERSIONS_DIR)
-    if is_remote(root):
-        from .fs import remote_ls_names
-
-        names = remote_ls_names(get_fs(root, storage_options), vdir)
-    else:
-        if not os.path.isdir(vdir):
-            return []
-        names = os.listdir(vdir)
+    names = ls_names(get_fs(root, storage_options),
+                     os.path.join(root, VERSIONS_DIR))
     return sorted(int(n.split(".")[0]) for n in names
                   if n.endswith(".manifest"))
 
@@ -3377,17 +3368,11 @@ def write_deletion_arrow(root: str, fragment_id: int, read_version: int,
             w.write_table(tbl)
         payload = buf.getvalue()
     key = f"{DELETIONS_DIR}/{deletion_file_name(fragment_id, d)}"
-    if storage_options is not None or str(root).lower().startswith(
-            ("s3://", "s3a://", "s3n://")):
-        from .fs import get_fs
+    from .fs import get_fs
 
-        fs = get_fs(root, storage_options)
-        with fs.open(f"{str(root).rstrip('/')}/{key}", "wb") as fh:
-            fh.write(payload)
-    else:
-        os.makedirs(os.path.join(root, DELETIONS_DIR), exist_ok=True)
-        with open(os.path.join(root, key), "wb") as fh:
-            fh.write(payload)
+    with get_fs(root, storage_options).open(
+            f"{str(root).rstrip('/')}/{key}", "wb") as fh:
+        fh.write(payload)
     return d
 
 
@@ -3645,12 +3630,11 @@ def commit_native(root: str, fields: list[NativeField],
     import uuid as _uuid
 
     from .fragments import CommitConflict
-    from .fs import create_exclusive, get_fs, is_remote
+    from .fs import create_exclusive, get_fs, write_atomic
 
-    remote_fs = get_fs(root, storage_options) if is_remote(root) else None
-    if remote_fs is None:
-        os.makedirs(os.path.join(root, VERSIONS_DIR), exist_ok=True)
-        os.makedirs(os.path.join(root, "_transactions"), exist_ok=True)
+    fs = get_fs(root, storage_options)
+    fs.makedirs(os.path.join(root, VERSIONS_DIR), exist_ok=True)
+    fs.makedirs(os.path.join(root, "_transactions"), exist_ok=True)
     if timestamp is None:
         now = time.time()
         timestamp = (int(now), int((now % 1) * 1e9))
@@ -3733,35 +3717,22 @@ def commit_native(root: str, fields: list[NativeField],
         tuid = txn_uuid or str(_uuid.uuid4())
         txn_file = f"{read_version}-{tuid}.txn"
         txn_path = os.path.join(root, "_transactions", txn_file)
-        if remote_fs is not None:
-            with remote_fs.open(txn_path, "wb") as fh:
-                fh.write(_txn_bytes(tuid, out_fields, fragments))
-        else:
-            with open(txn_path, "wb") as fh:
-                fh.write(_txn_bytes(tuid, out_fields, fragments))
+        with fs.open(txn_path, "wb") as fh:
+            fh.write(_txn_bytes(tuid, out_fields, fragments))
 
         version = (versions[-1] + 1) if versions else 1
         mpath = os.path.join(root, VERSIONS_DIR, f"{version}.manifest")
         mbytes = _manifest_bytes(out_fields, fragments, version,
                                  txn_file, timestamp, config=out_config)
         try:
-            if remote_fs is not None:
-                # S3 conditional PUT (If-None-Match: *) — the same
-                # single-winner semantics as the local O_EXCL create
-                create_exclusive(remote_fs, mpath, mbytes)
-            else:
-                with open(mpath, "xb") as fh:  # single-winner commit
-                    fh.write(mbytes)
+            create_exclusive(fs, mpath, mbytes)  # single-winner commit
         except FileExistsError:
             # lost the race: this round's txn file references a manifest
             # that will never exist — collect it NOW rather than leaving
             # an orphan for vacuum (and, with a caller-pinned txn_uuid,
             # rather than accreting one orphan per retried read_version)
             try:
-                if remote_fs is not None:
-                    remote_fs.rm(txn_path)
-                else:
-                    os.remove(txn_path)
+                fs.rm(txn_path)
             except OSError:
                 pass
             if mode == "create":
@@ -3770,15 +3741,8 @@ def commit_native(root: str, fields: list[NativeField],
         if stats_map:
             # after the win: a crash here leaves manifest-without-sidecar,
             # which readers treat as stats-absent (no pruning — safe)
-            if remote_fs is not None:
-                # a PUT is atomic per key — no tmp+rename dance needed
-                with remote_fs.open(_stats_sidecar(root, version), "wb") as fh:
-                    fh.write(json.dumps(stats_map).encode())
-            else:
-                tmp = _stats_sidecar(root, version) + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(stats_map, fh)
-                os.rename(tmp, _stats_sidecar(root, version))
+            write_atomic(fs, _stats_sidecar(root, version),
+                         json.dumps(stats_map).encode())
         return read_native_manifest(root, version,
                                     storage_options=storage_options)
 

@@ -280,10 +280,9 @@ def verify_integrity(spark, path: str, version: int | None = None,
     Returns ``{"checked", "skipped", "mismatched": [{file, expected,
     actual}]}``; raises :class:`IntegrityError` naming the files on any
     mismatch unless ``raise_on_mismatch=False``."""
-    from .fs import is_remote
+    from .fs import get_fs
 
     manifest = FR.read_manifest_compat(path, version, storage_options)
-    remote = is_remote(path)
     base = str(path).rstrip("/")
     entries = []
     skipped = 0
@@ -292,32 +291,22 @@ def verify_integrity(spark, path: str, version: int | None = None,
         if digest is None:
             skipped += 1
             continue
-        url = (f"{base}/{f.file}" if remote
-               else os.path.join(path, f.file))
-        entries.append((url, digest))
+        entries.append((f"{base}/{f.file}", digest))
 
     def _hash_one(url: str) -> str:
-        if remote:
-            from .fs import get_fs
-
-            return FR.sha256_of(url, get_fs(path, storage_options))
-        return FR.sha256_of(url)
+        return FR.sha256_of(url, get_fs(path, storage_options))
 
     if spark is not None and entries:
         storage = storage_options
-        is_rem = remote
         root = path
 
         def check(batches):
             import pandas as pd
 
             from flink_connector_lance_spark.sources import fragments as _FR
+            from flink_connector_lance_spark.sources.fs import get_fs
 
-            fs = None
-            if is_rem:
-                from flink_connector_lance_spark.sources.fs import get_fs
-
-                fs = get_fs(root, storage)
+            fs = get_fs(root, storage)
             for pdf in batches:
                 actual = [_FR.sha256_of(u, fs) for u in pdf["file"]]
                 yield pd.DataFrame({"file": pdf["file"],
@@ -354,26 +343,21 @@ def verify_integrity(spark, path: str, version: int | None = None,
     return report
 
 
-def _index_pinned_versions(path: str) -> set[int]:
-    """Dataset versions referenced by on-disk ANN index metadata
-    (``_indexes/<col>/{ivf,pq}/index_meta.json``)."""
-    import json
+def _index_pinned_versions(path: str, storage: "dict | None" = None) -> set[int]:
+    """Dataset versions an ANN index was built against, read through
+    ``index._kind_metas`` (the same lookup indexed search uses, so the
+    pin follows the index on every filesystem)."""
+    from ..index import INDEXES_DIR, _kind_metas
+    from .fs import get_fs, ls_names
 
     pinned: set[int] = set()
-    idx_root = os.path.join(path, "_indexes")
-    if not os.path.isdir(idx_root):
-        return pinned
-    for col in os.listdir(idx_root):
-        for kind in ("ivf", "pq", "hnsw"):
-            meta_p = os.path.join(idx_root, col, kind, "index_meta.json")
-            if os.path.exists(meta_p):
-                try:
-                    with open(meta_p) as fh:
-                        v = json.load(fh).get("dataset_version")
-                    if isinstance(v, int):
-                        pinned.add(v)
-                except (OSError, ValueError):
-                    continue
+    for col in ls_names(get_fs(path, storage), f"{path}/{INDEXES_DIR}"):
+        try:
+            metas = _kind_metas(path, col, storage)
+        except (OSError, ValueError):
+            continue
+        pinned |= {m.get("dataset_version") for m in metas.values()
+                   if isinstance(m.get("dataset_version"), int)}
     return pinned
 
 
@@ -388,25 +372,32 @@ def vacuum_dataset(
     ``keep_versions`` and delete fragment files no retained version
     references. Without this, compaction/appends accrete files forever —
     at 100 TB the dead-file volume quickly exceeds the live table.
+    Manifests an ANN index was built against stay pinned: index
+    staleness handling (index.split_by_index_coverage) diffs the current
+    file set against the build-time manifest, and vacuuming it away
+    would degrade every indexed search to brute force.
 
     Deletion order is crash-safe: old manifests are removed FIRST, then
     unreferenced data files — a crash mid-vacuum can only leave orphaned
     (invisible) data files, never a manifest pointing at deleted data.
     Readers of retained versions are unaffected (their file sets are
     untouched); readers pinned to a vacuumed version fail fast on the
-    missing manifest, the same contract as Lance's own cleanup.
+    missing manifest, the same contract as Lance's own cleanup. Runs
+    over key listings and manifest reads only, on any filesystem.
 
     Crashed operations leave staging directories behind (write_dataset's
     ``_staging-*`` plus the maintenance rewrites' ``_compact-*`` /
     ``_delete-*`` / ``_merge-*-*`` / ``_cluster-*`` — see
     ``STAGING_PREFIXES``; the finally-cleanup doesn't run if the driver
-    dies). Vacuum removes staging dirs older than ``staging_grace_seconds`` (default 24 h — generous headroom for
-    an in-flight write's staging phase; a LIVE writer's staging dir is
-    always younger than its own write).
+    dies). Vacuum removes staging dirs older than
+    ``staging_grace_seconds`` (default 24 h — generous headroom for an
+    in-flight write's staging phase; a LIVE writer's staging dir is
+    always younger than its own write). On s3 the same grace guards
+    unreferenced data keys (see ``_split_young``).
 
     Returns ``{"kept_versions": [...], "dropped_versions": n,
-    "deleted_files": n, "reclaimed_bytes": n, "staging_dirs_removed": n}``;
-    ``dry_run`` reports without deleting."""
+    "deleted_files": n, "reclaimed_bytes": n, "staging_dirs_removed": n,
+    "skipped_young_keys": n}``; ``dry_run`` reports without deleting."""
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
     if FR.HAVE_LANCE and not dry_run:  # native path (fake lance in tests)
@@ -422,62 +413,58 @@ def vacuum_dataset(
             )
         return _vacuum_lance(path)
     from . import lance_format as LF
-    from .fs import is_remote
+    from .bloom import BLOOM_SUFFIX
+    from .fs import get_fs, ls_names
 
-    if is_remote(path):
-        return _vacuum_remote(path, keep_versions, dry_run, storage_options,
+    storage = storage_options
+    fs = get_fs(path, storage)
+    base = str(path).rstrip("/")
+    if LF.is_native_dataset(base, storage):
+        return _vacuum_native(fs, base, keep_versions, dry_run, storage,
                               staging_grace_seconds)
-    if LF.is_native_dataset(path):
-        return _vacuum_native(path, keep_versions, dry_run)
-    latest = FR.latest_version(path)
-    if latest is None:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
     all_versions = sorted(
-        int(name.split(".")[0])
-        for name in os.listdir(os.path.join(path, FR.VERSIONS_DIR))
-        if name.endswith(".manifest.json")
-    )
-    kept = all_versions[-keep_versions:]
-    # pin manifests an ANN index was built against: index staleness
-    # handling (index.split_by_index_coverage) diffs the current file set
-    # against the build-time manifest — vacuuming it away degrades every
-    # indexed search to brute force
-    kept = sorted(set(kept) | (_index_pinned_versions(path) & set(all_versions)))
+        int(n.split(".")[0])
+        for n in ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
+        if n.endswith(".manifest.json"))
+    if not all_versions:
+        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
+    kept = sorted(set(all_versions[-keep_versions:])
+                  | (_index_pinned_versions(base, storage) & set(all_versions)))
     dropped = [v for v in all_versions if v not in kept]
-    live = {f.file for v in kept for f in FR.read_manifest(path, v).fragments}
+    live = {f.file for v in kept
+            for f in FR.read_manifest(base, v, storage).fragments}
     # a bloom sidecar (sources/bloom.py) lives exactly as long as its
     # fragment: live fragments keep theirs, dead fragments' sidecars go
-    from .bloom import BLOOM_SUFFIX
-
     live |= {f + BLOOM_SUFFIX for f in live}
-    data_dir = os.path.join(path, FR.DATA_DIR)
-    dead = [
-        os.path.join(FR.DATA_DIR, name)
-        for name in (os.listdir(data_dir) if os.path.isdir(data_dir) else [])
-        if os.path.join(FR.DATA_DIR, name) not in live
-    ]
-    reclaimed = sum(os.path.getsize(os.path.join(path, f)) for f in dead)
-    import time
-
+    dead = [f"{FR.DATA_DIR}/{n}"
+            for n in ls_names(fs, f"{base}/{FR.DATA_DIR}")
+            if f"{FR.DATA_DIR}/{n}" not in live]
+    dead, young = _split_young(fs, base, dead, staging_grace_seconds)
+    reclaimed = _sizes(fs, base, dead)
+    # crashed-write leftovers, never referenced (the executor-direct s3
+    # writer stages nothing, so an s3 dataset lists none)
     stale_staging = [
-        os.path.join(path, name)
-        for name in os.listdir(path)
-        if name.startswith(STAGING_PREFIXES) and os.path.isdir(os.path.join(path, name))
-        and time.time() - os.path.getmtime(os.path.join(path, name)) > staging_grace_seconds
+        n for n in ls_names(fs, base)
+        if n.startswith(STAGING_PREFIXES) and fs.isdir(f"{base}/{n}")
+        and (_object_age(fs, f"{base}/{n}") or 0) > staging_grace_seconds
     ]
     if not dry_run:
         for v in dropped:  # manifests first: see crash-safety note above
-            os.remove(os.path.join(path, FR.VERSIONS_DIR, f"{v}.manifest.json"))
+            fs.rm(FR._manifest_path(base, v))
         for f in dead:
-            os.remove(os.path.join(path, f))
-        for d in stale_staging:  # crashed-write leftovers, never referenced
-            shutil.rmtree(d, ignore_errors=True)
+            fs.rm(f"{base}/{f}")
+        for n in stale_staging:
+            try:
+                fs.rm(f"{base}/{n}", recursive=True)
+            except OSError:
+                pass
     return {
         "kept_versions": kept,
         "dropped_versions": len(dropped),
         "deleted_files": len(dead),
         "reclaimed_bytes": reclaimed,
         "staging_dirs_removed": len(stale_staging),
+        "skipped_young_keys": len(young),
     }
 
 
@@ -532,16 +519,11 @@ def _inherit_blooms(spark, path, manifest: FR.Manifest, new_fragments):
     return attach_blooms(spark, path, new_fragments, cols)
 
 
-def _remote_object_age(fs, url: str) -> "float | None":
-    """Age in seconds of one remote object, or None when the backend
-    reports no creation/modification timestamp. Used by the remote
-    vacuum's grace window: the executor-direct writes PUT fragment keys
-    to ``data/`` for the whole job duration BEFORE the manifest commit,
-    so an unreferenced key younger than the grace window may be an
-    in-flight write, not garbage — deleting it would let the write's
-    conditional-PUT commit land a manifest referencing deleted objects.
-    s3fs reports ``LastModified`` (a datetime); fsspec local/memory
-    backends report ``mtime`` (epoch float) — both are accepted."""
+def _object_age(fs, url: str) -> "float | None":
+    """Age in seconds of one object, or None when the backend reports no
+    creation/modification timestamp. s3fs reports ``LastModified`` (a
+    datetime); LocalFS and fsspec local/memory backends report
+    ``mtime`` (epoch float) — both are accepted."""
     import datetime
     import time
 
@@ -562,76 +544,28 @@ def _remote_object_age(fs, url: str) -> "float | None":
 
 def _split_young(fs, base: str, dead: list, grace_seconds: int) -> tuple[list, list]:
     """Partition candidate-dead keys into (deletable, skipped-young).
-    A key whose age is unknown is treated as YOUNG — never delete blind
-    (the cost of keeping an orphan one more vacuum pass is storage; the
-    cost of deleting an in-flight fragment is silent data loss)."""
-    if grace_seconds <= 0:
+    The executor-direct s3 writes PUT fragment keys to ``data/`` for the
+    whole job duration BEFORE the manifest commit, so an unreferenced
+    key younger than the grace window may be an in-flight write, not
+    garbage — deleting it would let the write's conditional-PUT commit
+    land a manifest referencing deleted objects. A key whose age is
+    unknown is treated as YOUNG — never delete blind (the cost of
+    keeping an orphan one more vacuum pass is storage; the cost of
+    deleting an in-flight fragment is silent data loss)."""
+    from .fs import is_remote
+
+    # s3 only: its tasks PUT into data/ long before the commit, while a
+    # local emulated write stages elsewhere and promotes just before it
+    if grace_seconds <= 0 or not is_remote(base):
         return list(dead), []
     old, young = [], []
     for rel in dead:
-        age = _remote_object_age(fs, f"{base}/{rel}")
+        age = _object_age(fs, f"{base}/{rel}")
         (old if age is not None and age > grace_seconds else young).append(rel)
     return old, young
 
 
-def _vacuum_remote(path: str, keep_versions: int, dry_run: bool,
-                   storage_options: dict | None,
-                   staging_grace_seconds: int = 24 * 3600) -> dict:
-    """MVCC garbage collection for an s3:// dataset — the fs-plane twin
-    of the local vacuum (same crash-safe order: manifests first, then
-    unreferenced data keys; a crash mid-vacuum leaves only invisible
-    orphan keys, never a manifest pointing at deleted data). At 100 TB
-    the dead-object volume is the dominant storage cost, so this runs
-    driver-side over KEY LISTINGS only — two prefix lists plus one tiny
-    manifest read per retained version, no data IO. ANN index pinning is
-    a local-backend construct (indexes are refused on s3 datasets) and
-    staging dirs do not exist remotely (the executor-direct write stages
-    nothing), so neither applies here."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_SUFFIX
-    from .fs import get_fs, remote_ls_names
-
-    fs = get_fs(path, storage_options)
-    base = str(path).rstrip("/")
-    names = remote_ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
-    if any(n.endswith(".manifest") for n in names):
-        return _vacuum_remote_native(fs, base, names, keep_versions, dry_run,
-                                     storage_options, staging_grace_seconds)
-    all_versions = sorted(
-        int(n.split(".")[0]) for n in names if n.endswith(".manifest.json"))
-    if not all_versions:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
-    kept = all_versions[-keep_versions:]
-    dropped = [v for v in all_versions if v not in kept]
-    live = {
-        f.file for v in kept
-        for f in FR.read_manifest(path, v, storage_options).fragments
-    }
-    live |= {f + BLOOM_SUFFIX for f in live}
-    data_names = remote_ls_names(fs, f"{base}/{FR.DATA_DIR}")
-    dead = [os.path.join(FR.DATA_DIR, n) for n in data_names
-            if os.path.join(FR.DATA_DIR, n) not in live]
-    # grace window: an unreferenced key younger than the grace may be an
-    # IN-FLIGHT executor-direct write (fragments land before the commit)
-    # — the remote twin of the local staging-dir grace contract
-    dead, young = _split_young(fs, base, dead, staging_grace_seconds)
-    reclaimed = _remote_sizes(fs, base, dead)
-    if not dry_run:
-        for v in dropped:  # manifests first: crash-safety note above
-            fs.rm(f"{base}/{FR.VERSIONS_DIR}/{v}.manifest.json")
-        for f in dead:
-            fs.rm(f"{base}/{f}")
-    return {
-        "kept_versions": kept,
-        "dropped_versions": len(dropped),
-        "deleted_files": len(dead),
-        "reclaimed_bytes": reclaimed,
-        "staging_dirs_removed": 0,
-        "skipped_young_keys": len(young),
-    }
-
-
-def _remote_sizes(fs, base: str, rel_files: list) -> int:
+def _sizes(fs, base: str, rel_files: list) -> int:
     total = 0
     for f in rel_files:
         try:
@@ -641,143 +575,66 @@ def _remote_sizes(fs, base: str, rel_files: list) -> int:
     return total
 
 
-def _vacuum_remote_native(fs, base: str, names: list, keep_versions: int,
-                          dry_run: bool,
-                          storage_options: dict | None,
-                          staging_grace_seconds: int = 24 * 3600) -> dict:
-    """Remote twin of ``_vacuum_native``: a REAL Lance binary chain on
-    s3 — manifests (and their stats sidecars) drop first, then
-    transaction files and data keys no retained version references. ANN
-    index pinning is a local-backend construct and does not apply.
-    Unreferenced data keys (and txn files) younger than the grace window
-    are SKIPPED — they may belong to an in-flight executor-direct write
-    whose manifest has not committed yet (see ``_split_young``)."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_SUFFIX
-
-    versions = sorted(int(n.split(".")[0]) for n in names
-                      if n.endswith(".manifest"))
-    kept = versions[-keep_versions:]
-    dropped = [v for v in versions if v not in kept]
-    live_files: set[str] = set()
-    live_txns: set[str] = set()
-    live_dels: set[str] = set()
-    for v in kept:
-        mf = LF.read_native_manifest(base, v, storage_options)
-        live_files |= {fr.file for fr in mf.fragments}
-        live_dels |= {LF.deletion_file_name(fr.fragment_id, fr.deletion)
-                      for fr in mf.fragments if fr.deletion}
-        # the txn file name rides in the manifest; re-read it raw
-        import struct as _s
-
-        with fs.open(f"{base}/{LF.VERSIONS_DIR}/{v}.manifest", "rb") as fh:
-            blob = fh.read()
-        msg = LF._pb_fields(blob[4:4 + _s.unpack_from("<I", blob, 0)[0]])
-        live_txns.add(LF._one(msg, 12, b"").decode("utf-8"))
-    live_files |= {f + BLOOM_SUFFIX for f in live_files}
-    from .fs import remote_ls_names
-
-    data_names = remote_ls_names(fs, f"{base}/{LF.DATA_DIR}")
-    dead = [n for n in data_names if n not in live_files]
-    txn_names = remote_ls_names(fs, f"{base}/_transactions")
-    dead_txns = [n for n in txn_names if n not in live_txns]
-    try:
-        del_names = remote_ls_names(fs, f"{base}/{LF.DELETIONS_DIR}")
-    except (FileNotFoundError, OSError):
-        del_names = []
-    dead_dels = [n for n in del_names if n not in live_dels]
-    dead, young = _split_young(fs, f"{base}/{LF.DATA_DIR}", dead,
-                               staging_grace_seconds)
-    dead_txns, young_txns = _split_young(fs, f"{base}/_transactions",
-                                         dead_txns, staging_grace_seconds)
-    dead_dels, young_dels = _split_young(fs, f"{base}/{LF.DELETIONS_DIR}",
-                                         dead_dels, staging_grace_seconds)
-    reclaimed = _remote_sizes(fs, f"{base}/{LF.DATA_DIR}", dead)
-    if not dry_run:
-        for v in dropped:  # manifests first (crash-safe order)
-            fs.rm(f"{base}/{LF.VERSIONS_DIR}/{v}.manifest")
-            try:
-                fs.rm(f"{base}/{LF.VERSIONS_DIR}/{v}.stats.json")
-            except (FileNotFoundError, OSError):
-                pass
-        for n in dead_txns:
-            fs.rm(f"{base}/_transactions/{n}")
-        for n in dead:
-            fs.rm(f"{base}/{LF.DATA_DIR}/{n}")
-        for n in dead_dels:
-            fs.rm(f"{base}/{LF.DELETIONS_DIR}/{n}")
-    return {"kept_versions": kept, "dropped_versions": len(dropped),
-            "deleted_files": len(dead) + len(dead_dels),
-            "reclaimed_bytes": reclaimed,
-            "staging_dirs_removed": 0,
-            "skipped_young_keys": len(young) + len(young_txns) + len(young_dels)}
-
-
-def _vacuum_native(path: str, keep_versions: int, dry_run: bool) -> dict:
+def _vacuum_native(fs, base: str, keep_versions: int, dry_run: bool,
+                   storage: "dict | None",
+                   staging_grace_seconds: int = 24 * 3600) -> dict:
     """MVCC garbage collection for a REAL Lance binary dataset — same
-    crash-safe order as the emulated path: old manifests first (plus
-    their transaction files), then data files no retained version
-    references. A crash mid-vacuum can only orphan invisible data files,
-    never leave a manifest pointing at deleted data."""
+    crash-safe order and index pinning as the emulated path: old
+    manifests (and their stats sidecars) first, then transaction files,
+    data files and deletion vectors no retained version references."""
     import struct as _s
 
     from . import lance_format as LF
+    from .bloom import BLOOM_SUFFIX
+    from .fs import ls_names
 
-    versions = LF.native_manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"not a dataset (no {LF.VERSIONS_DIR}/): {path}")
-    kept = versions[-keep_versions:]
-    # pin manifests an ANN index was built against (same contract as the
-    # emulated vacuum): coverage-splitting diffs the current file set
-    # against the build-time manifest — vacuuming it away degrades every
-    # indexed search over this dataset to brute force, permanently
-    kept = sorted(set(kept) | (_index_pinned_versions(path) & set(versions)))
+    versions = LF.native_manifest_versions(base, storage)
+    kept = sorted(set(versions[-keep_versions:])
+                  | (_index_pinned_versions(base, storage) & set(versions)))
     dropped = [v for v in versions if v not in kept]
     live_files: set[str] = set()
     live_txns: set[str] = set()
     live_dels: set[str] = set()
     for v in kept:
-        mpath = os.path.join(path, LF.VERSIONS_DIR, f"{v}.manifest")
-        blob = open(mpath, "rb").read()
+        mpath = f"{base}/{LF.VERSIONS_DIR}/{v}.manifest"
+        with LF._open_binary(mpath, storage) as fh:
+            blob = fh.read()
+        # the txn file name rides in the manifest; read it raw
         msg = LF._pb_fields(blob[4:4 + _s.unpack_from("<I", blob, 0)[0]])
         live_txns.add(LF._one(msg, 12, b"").decode("utf-8"))
-        vmf = LF.read_native_manifest(path, v)
+        vmf = LF.read_native_manifest(base, v, storage)
         live_files |= {fr.file for fr in vmf.fragments}
         live_dels |= {LF.deletion_file_name(fr.fragment_id, fr.deletion)
                       for fr in vmf.fragments if fr.deletion}
-    from .bloom import BLOOM_SUFFIX
-
     # a bloom sidecar lives exactly as long as its fragment
     live_files |= {f + BLOOM_SUFFIX for f in live_files}
-    data_dir = os.path.join(path, LF.DATA_DIR)
-    dead = [n for n in (os.listdir(data_dir) if os.path.isdir(data_dir) else [])
-            if n not in live_files]
-    txn_dir = os.path.join(path, "_transactions")
-    dead_txns = [n for n in (os.listdir(txn_dir) if os.path.isdir(txn_dir) else [])
-                 if n not in live_txns]
     # deletion vectors live as long as any retained manifest references
     # them (superseded vectors from re-deletes become dead keys)
-    del_dir = os.path.join(path, LF.DELETIONS_DIR)
-    dead_dels = [n for n in (os.listdir(del_dir) if os.path.isdir(del_dir)
-                             else []) if n not in live_dels]
-    reclaimed = sum(os.path.getsize(os.path.join(data_dir, n)) for n in dead)
+    dead = {}
+    young = 0
+    for sub, live in ((LF.DATA_DIR, live_files), ("_transactions", live_txns),
+                      (LF.DELETIONS_DIR, live_dels)):
+        cand = [n for n in ls_names(fs, f"{base}/{sub}") if n not in live]
+        dead[sub], skipped = _split_young(fs, f"{base}/{sub}", cand,
+                                          staging_grace_seconds)
+        young += len(skipped)
+    reclaimed = _sizes(fs, f"{base}/{LF.DATA_DIR}", dead[LF.DATA_DIR])
     if not dry_run:
-        for v in dropped:
-            os.remove(os.path.join(path, LF.VERSIONS_DIR, f"{v}.manifest"))
+        for v in dropped:  # manifests first (crash-safe order)
+            fs.rm(f"{base}/{LF.VERSIONS_DIR}/{v}.manifest")
             try:  # our zone-map sidecar lives and dies with its manifest
-                os.remove(LF._stats_sidecar(path, v))
-            except FileNotFoundError:
+                fs.rm(LF._stats_sidecar(base, v))
+            except OSError:
                 pass
-        for n in dead_txns:
-            os.remove(os.path.join(txn_dir, n))
-        for n in dead:
-            os.remove(os.path.join(data_dir, n))
-        for n in dead_dels:
-            os.remove(os.path.join(del_dir, n))
+        for sub in ("_transactions", LF.DATA_DIR, LF.DELETIONS_DIR):
+            for n in dead[sub]:
+                fs.rm(f"{base}/{sub}/{n}")
     return {"kept_versions": kept, "dropped_versions": len(dropped),
-            "deleted_files": len(dead) + len(dead_dels),
+            "deleted_files": (len(dead[LF.DATA_DIR])
+                              + len(dead[LF.DELETIONS_DIR])),
             "reclaimed_bytes": reclaimed,
-            "staging_dirs_removed": 0}
+            "staging_dirs_removed": 0,
+            "skipped_young_keys": young}
 
 
 def compact_dataset(
@@ -792,14 +649,13 @@ def compact_dataset(
     new version. No-op (returns the current manifest) when fewer than two
     runt fragments exist."""
     threshold = small_threshold if small_threshold is not None else target_rows_per_fragment // 2
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    if is_remote(path):
+    root, storage, plane = _plane(path, s3)
+    if plane == "native":
+        return _compact_native(spark, root, target_rows_per_fragment,
+                               threshold, storage)
+    if plane == "remote":
         return _compact_remote(spark, path, target_rows_per_fragment,
                                threshold, s3)
-    if LF.is_native_dataset(path):
-        return _compact_native(spark, path, target_rows_per_fragment, threshold)
     manifest = FR.read_manifest(path)
     small = [f for f in manifest.fragments if f.row_count < threshold]
     if len(small) < 2:
@@ -837,7 +693,35 @@ def compact_dataset(
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def _native_bloom_columns(path: str, mf) -> "list[str]":
+def _plane(path: str, s3) -> "tuple[str, dict | None, str]":
+    """``(root, storage_options, plane)`` of a maintenance rewrite —
+    the two forks the data forces. ``plane`` is ``"native"`` for a REAL
+    Lance binary dataset on any filesystem (one location-agnostic
+    function per operation; ``root`` is then ``fs.dataset_root``), else
+    the emulated data-plane writer: ``"local"`` (JVM staged write +
+    promote — faster for small commits) or ``"remote"`` (executor-direct
+    PUTs — the JVM cannot write to s3 without hadoop-aws)."""
+    from . import lance_format as LF
+    from .fs import dataset_root, is_remote
+
+    storage = s3.to_storage_options() if s3 is not None else None
+    if LF.is_native_dataset(path, storage):
+        return dataset_root(path), storage, "native"
+    return path, storage, "remote" if is_remote(path) else "local"
+
+
+def _carried(frags) -> list:
+    """Commit entries that carry native fragments over unchanged — file,
+    field mapping, deletion vector AND fragment id (the deletion file's
+    key embeds the id; dropping any of them would resurrect deleted rows
+    or break evolved reads)."""
+    return [(fr.file, fr.physical_rows, None, fr.field_ids,
+             fr.column_indices, fr.deletion, fr.fragment_id)
+            for fr in frags]
+
+
+def _native_bloom_columns(path: str, mf,
+                          storage: "dict | None" = None) -> "list[str]":
     """Columns any live native fragment carries a bloom for — the
     re-attach set for copy-on-write rewrites (the native twin of the
     emulated path's _inherit_blooms contract: a rewrite must not
@@ -845,24 +729,24 @@ def _native_bloom_columns(path: str, mf) -> "list[str]":
     from . import lance_format as LF
     from .bloom import BLOOM_STATS_KEY
 
-    stats = LF.read_native_stats(path, mf.version)
+    stats = LF.read_native_stats(path, mf.version, storage)
     return sorted({c for st in stats.values()
                    for c in (st.get(BLOOM_STATS_KEY) or {}).get("cols", {})})
 
 
 def _compact_native(spark: SparkSession, path: str, target_rows: int,
-                    threshold: int):
+                    threshold: int, storage: "dict | None" = None):
     """Runt-merge compaction for a REAL Lance binary dataset via the
     stdlib v2 codec — same plan shape as the emulated path: one
     fragment-subset scan of the runts (one task per file), executor-side
     re-encode into ~target-sized ``.lance`` files, ONE overwrite commit
-    keeping the big fragments by name (their bytes never move). Old
-    versions keep reading pre-compaction data (MVCC)."""
+    under CAS keeping the big fragments by name (their bytes never
+    move). Old versions keep reading pre-compaction data (MVCC)."""
     from . import lance_format as LF
     from .reader import read_native_files
     from .writer import produce_native_fragments
 
-    mf = LF.read_native_manifest(path)
+    mf = LF.read_native_manifest(path, storage_options=storage)
     # rewrite candidates: runts, plus ANY fragment carrying a deletion
     # vector — compaction is what materializes the tombstones (until
     # then every scan pays the masking cost)
@@ -871,24 +755,22 @@ def _compact_native(spark: SparkSession, path: str, target_rows: int,
     if len(small) < 2 and not any(fr.deletion for fr in small):
         return mf
     keep = [fr for fr in mf.fragments if fr not in small]
-    files = [os.path.join(path, LF.DATA_DIR, fr.file) for fr in small]
+    files = [f"{path}/{LF.DATA_DIR}/{fr.file}" for fr in small]
     df = read_native_files(spark, mf.fields, files,
-                           deletions=LF.native_deletion_paths(path, mf))
+                           deletions=LF.native_deletion_paths(path, mf),
+                           storage_options=storage)
     if len(small) > 1:
         # runts merge INTO shared files, not 1:1 — funnel them into
         # ceil(total/target) tasks so the output hits the target size
         total = sum(fr.physical_rows for fr in small)
         df = df.coalesce(max(1, -(-total // target_rows)))
-    merged = produce_native_fragments(df, path, LF.arrow_schema_of(mf.fields),
-                                      target_rows,
-                                      bloom_columns=_native_bloom_columns(path, mf) or None)
-    # carried fragments keep their field mapping AND deletion vector —
-    # dropping either would resurrect deleted rows / break evolved reads
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + merged
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version)
+    merged = produce_native_fragments(
+        df, path, LF.arrow_schema_of(mf.fields), target_rows,
+        bloom_columns=_native_bloom_columns(path, mf, storage) or None,
+        storage_options=storage)
+    return LF.commit_native(path, mf.fields, _carried(keep) + merged,
+                            "overwrite", expected_base_version=mf.version,
+                            storage_options=storage)
 
 
 def delete_rows(
@@ -929,22 +811,19 @@ def delete_rows(
     if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
         return _delete_lance(path, predicate)
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    from . import lance_format as LF
-    from .fs import is_remote
-
+    root, storage, plane = _plane(path, s3)
     if use_deletion_vectors:
-        storage = s3.to_storage_options() if s3 is not None else None
-        if not LF.is_native_dataset(path, storage):
+        if plane != "native":
             raise NotImplementedError(
                 "use_deletion_vectors requires a native binary dataset "
                 "(the tombstone sidecar contract is the native "
                 "format's); the copy-on-write rewrite serves the "
                 "emulated backend")
-        return _delete_native_vectors(spark, path, pred, storage)
-    if is_remote(path):
+        return _delete_native_vectors(spark, root, pred, storage)
+    if plane == "native":
+        return _delete_native(spark, root, pred, storage)
+    if plane == "remote":
         return _delete_remote(spark, path, pred, s3)
-    if LF.is_native_dataset(path):
-        return _delete_native(spark, path, pred)
     # abspath: input_file_name() yields absolute URIs, so a relative
     # dataset path would never intersect and the DELETE would no-op
     # (and executor-side stage writes would resolve against the JVM cwd)
@@ -999,48 +878,47 @@ def delete_rows(
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def _delete_native(spark: SparkSession, path: str, pred):
+def _delete_native(spark: SparkSession, path: str, pred,
+                   storage: "dict | None" = None):
     """Copy-on-write DELETE for a REAL Lance binary dataset — same plan
     shape as the emulated path: one probe scan tags every row with its
     source fragment (a real column, so it survives any shuffle — no
     ``input_file_name()`` fragility), only affected fragments rewrite
     through the v2 codec, untouched fragments carry over byte-identical
-    into one overwrite commit. SQL three-valued logic: NULL-predicate
-    rows survive."""
+    into one overwrite commit under CAS. SQL three-valued logic:
+    NULL-predicate rows survive."""
     import pyspark.sql.functions as F
 
     from . import lance_format as LF
     from .reader import read_native_files
     from .writer import produce_native_fragments
 
-    path = os.path.abspath(path)
-    mf = LF.read_native_manifest(path)
+    mf = LF.read_native_manifest(path, storage_options=storage)
     if not mf.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
-    by_abs = {os.path.join(path, LF.DATA_DIR, fr.file): fr
-              for fr in mf.fragments}
+    by_abs = {f"{path}/{LF.DATA_DIR}/{fr.file}": fr for fr in mf.fragments}
     dels = LF.native_deletion_paths(path, mf)
     probe = read_native_files(spark, mf.fields, sorted(by_abs),
-                              file_col="__frag", deletions=dels)
+                              file_col="__frag", deletions=dels,
+                              storage_options=storage)
     affected = {r.f for r in probe.filter(pred)
                 .select(F.col("__frag").alias("f")).distinct().collect()}
     if not affected:
         return mf  # nothing matched: no new version
     keep = [fr for abs_p, fr in by_abs.items() if abs_p not in affected]
     survivors = (read_native_files(spark, mf.fields, sorted(affected),
-                                   deletions=dels)
+                                   deletions=dels, storage_options=storage)
                  .filter(~F.coalesce(pred, F.lit(False))))
-    new = produce_native_fragments(survivors, path,
-                                   LF.arrow_schema_of(mf.fields), 1_000_000,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + new
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version)
+    new = produce_native_fragments(
+        survivors, path, LF.arrow_schema_of(mf.fields), 1_000_000,
+        bloom_columns=_native_bloom_columns(path, mf, storage) or None,
+        storage_options=storage)
+    return LF.commit_native(path, mf.fields, _carried(keep) + new,
+                            "overwrite", expected_base_version=mf.version,
+                            storage_options=storage)
 
 
-def _delete_native_vectors(spark: SparkSession, path: str, pred,
+def _delete_native_vectors(spark: SparkSession, base: str, pred,
                            storage: "dict | None" = None) -> FR.Manifest:
     """Row-level DELETE as deletion VECTORS (lance's own DELETE shape):
     one file+position-attributed probe finds the matching rows' physical
@@ -1068,13 +946,11 @@ def _delete_native_vectors(spark: SparkSession, path: str, pred,
     import pyspark.sql.functions as F
 
     from . import lance_format as LF
-    from .fs import is_remote
     from .reader import read_native_files
 
-    base = str(path).rstrip("/") if is_remote(path) else os.path.abspath(path)
     mf = LF.read_native_manifest(base, storage_options=storage)
     if not mf.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
+        raise FileNotFoundError(f"dataset {base} has no fragments")
     dels = LF.native_deletion_paths(base, mf)
     by_abs = {f"{base}/{LF.DATA_DIR}/{fr.file}": fr for fr in mf.fragments}
     # already-tombstoned rows are masked by the probe (deletions=...) so
@@ -1156,31 +1032,13 @@ def _remote_reader(spark, path: str, s3, file_col: "str | None" = None):
 def _rewrite_commit_remote(spark, path: str, storage, manifest, affected,
                            new_src, meta: dict, bloom_cols,
                            max_rows: int = 1_000_000):
-    """Shared tail of the remote copy-on-write rewrites (DELETE / MERGE /
-    compaction): produce fresh fragments from ``new_src`` executor-direct
-    (tasks PUT straight to s3), carry unaffected fragments by key, commit
-    ONE conditional-PUT version under CAS — for BOTH remote backends
-    (emulated parquet chain via FR.commit, native binary chain via
-    commit_native with the engine meta in the table-config slot and
-    per-fragment field mappings preserved)."""
-    from . import lance_format as LF
-    from .writer import (_meta_to_config, _put_fragments_from_tasks,
-                         produce_native_fragments)
+    """Shared tail of the remote emulated copy-on-write rewrites
+    (DELETE / MERGE / compaction / clustering): produce fresh fragments
+    from ``new_src`` executor-direct (tasks PUT straight to s3), carry
+    unaffected fragments by key, commit ONE conditional-PUT version
+    under CAS."""
+    from .writer import _put_fragments_from_tasks
 
-    if manifest.meta.get("native_lance"):
-        nmf = LF.read_native_manifest(path, storage_options=storage)
-        keep = [fr for fr in nmf.fragments
-                if f"{LF.DATA_DIR}/{fr.file}" not in affected]
-        new = produce_native_fragments(
-            new_src, path, LF.arrow_schema_of(nmf.fields), max_rows,
-            bloom_columns=bloom_cols or None, storage_options=storage)
-        pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-                  fr.column_indices, fr.deletion, fr.fragment_id)
-                 for fr in keep] + new
-        return LF.commit_native(path, nmf.fields, pairs, "overwrite",
-                                expected_base_version=nmf.version,
-                                config=_meta_to_config(meta),
-                                storage_options=storage)
     keep = [f for f in manifest.fragments if f.file not in affected]
     results = _put_fragments_from_tasks(
         new_src, str(path).rstrip("/"), storage,
@@ -1213,7 +1071,6 @@ def _delete_remote(spark: SparkSession, path: str, pred, s3) -> FR.Manifest:
     import pyspark.sql.functions as F
 
     from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
 
     storage = s3.to_storage_options() if s3 is not None else None
     manifest = FR.read_manifest_compat(path, storage_options=storage)
@@ -1256,7 +1113,6 @@ def _compact_remote(spark: SparkSession, path: str, target_rows: int,
     import pyspark.sql.functions as F
 
     from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
 
     storage = s3.to_storage_options() if s3 is not None else None
     manifest = FR.read_manifest_compat(path, storage_options=storage)
@@ -1293,7 +1149,6 @@ def _merge_remote(spark: SparkSession, path: str, updates: DataFrame,
     import pyspark.sql.functions as F
 
     from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
 
     storage = s3.to_storage_options() if s3 is not None else None
     manifest = FR.read_manifest_compat(path, storage_options=storage)
@@ -1332,59 +1187,57 @@ def _merge_remote(spark: SparkSession, path: str, updates: DataFrame,
 
 
 def _merge_native(spark: SparkSession, path: str, updates: DataFrame, key: str,
-                  commit_meta: dict | None = None):
+                  commit_meta: dict | None = None,
+                  storage: "dict | None" = None):
     """MERGE (upsert) for a REAL Lance binary dataset: semi-join probe
     finds fragments holding updated keys, survivors (anti-join) and the
     update rows re-encode together in ONE job, everything lands in one
-    overwrite commit — a reader never sees a delete-without-insert
-    intermediate. Untouched fragments carry over byte-identical."""
+    overwrite commit under CAS — a reader never sees a
+    delete-without-insert intermediate. Untouched fragments carry over
+    byte-identical."""
     import pyspark.sql.functions as F
 
+    from ..types import arrow_schema_to_spark
     from . import lance_format as LF
     from .reader import read_native_files
-    from .writer import produce_native_fragments
+    from .writer import _meta_to_config, produce_native_fragments
 
-    path = os.path.abspath(path)
-    mf = LF.read_native_manifest(path)
+    mf = LF.read_native_manifest(path, storage_options=storage)
     if not mf.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
     want = LF.arrow_schema_of(mf.fields).names
     missing = [c for c in want if c not in updates.columns]
     if missing:
         raise ValueError(f"updates are missing dataset column(s) {missing}")
-    by_abs = {os.path.join(path, LF.DATA_DIR, fr.file): fr
-              for fr in mf.fragments}
+    by_abs = {f"{path}/{LF.DATA_DIR}/{fr.file}": fr for fr in mf.fragments}
     keys = updates.select(key).distinct()
     dels = LF.native_deletion_paths(path, mf)
     probe = read_native_files(spark, mf.fields, sorted(by_abs),
-                              file_col="__frag", deletions=dels)
+                              file_col="__frag", deletions=dels,
+                              storage_options=storage)
     affected = {r.f for r in probe.join(keys, on=key, how="left_semi")
                 .select(F.col("__frag").alias("f")).distinct().collect()}
     keep = [fr for abs_p, fr in by_abs.items() if abs_p not in affected]
     # align updates to the dataset's Spark types BEFORE the union —
     # survivors carry the scan schema, and a type-mismatched union would
     # silently promote (or fail) instead of enforcing the table contract
-    from ..types import arrow_schema_to_spark
-
     sschema = arrow_schema_to_spark(LF.arrow_schema_of(mf.fields))
     new_src = updates.select(
         *[F.col(c).cast(sschema[c].dataType) for c in want])
     if affected:
         survivors = (read_native_files(spark, mf.fields, sorted(affected),
-                                       deletions=dels)
+                                       deletions=dels,
+                                       storage_options=storage)
                      .join(keys, on=key, how="left_anti").select(*want))
         new_src = survivors.unionByName(new_src)
-    new = produce_native_fragments(new_src, path,
-                                   LF.arrow_schema_of(mf.fields), 1_000_000,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    from .writer import _meta_to_config
-
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + new
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version,
-                            config=_meta_to_config(commit_meta))
+    new = produce_native_fragments(
+        new_src, path, LF.arrow_schema_of(mf.fields), 1_000_000,
+        bloom_columns=_native_bloom_columns(path, mf, storage) or None,
+        storage_options=storage)
+    return LF.commit_native(path, mf.fields, _carried(keep) + new,
+                            "overwrite", expected_base_version=mf.version,
+                            config=_meta_to_config(commit_meta),
+                            storage_options=storage)
 
 
 def merge_rows(
@@ -1425,13 +1278,11 @@ def merge_rows(
         )
     if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
         return _merge_lance(path, updates, key)
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    if is_remote(path):
+    root, storage, plane = _plane(path, s3)
+    if plane == "native":
+        return _merge_native(spark, root, updates, key, commit_meta, storage)
+    if plane == "remote":
         return _merge_remote(spark, path, updates, key, commit_meta, s3)
-    if LF.is_native_dataset(path):
-        return _merge_native(spark, path, updates, key, commit_meta)
     path = os.path.abspath(path)  # same relative-path contract as delete_rows
     manifest = FR.read_manifest(path)
     if not manifest.fragments:
@@ -1580,24 +1431,60 @@ def _zorder_key(df: DataFrame, by: list[str], stats_min_max: dict, bits: int = 8
     return z
 
 
-def _last_clustering_files(path: str) -> set:
-    """File set of the most recent clustering commit, or empty when none
+def _cluster_layout(df: DataFrame, by: list[str], zorder: bool,
+                    n_frags: int, frag_stats: list) -> "tuple[DataFrame, dict]":
+    """The one clustering exchange every backend shares: ONE range
+    exchange into ``n_frags`` tasks plus within-task sorts, on ``by``
+    directly or (``zorder`` with 2+ columns) on the Morton key, whose
+    per-column bounds come from the rewritten fragments' zone maps
+    ``frag_stats`` (no extra pass over the data). Returns the sorted
+    frame and the layout entry of the clustering commit meta."""
+    if not (zorder and len(by) >= 2):
+        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
+        return out, {"cluster_by": by}
+    mm: dict[str, tuple] = {}
+    for c in by:
+        per = [(st or {}).get(c) for st in frag_stats]
+        mins = [z["min"] for z in per if z and z.get("min") is not None]
+        maxs = [z["max"] for z in per if z and z.get("max") is not None]
+        if not mins or not maxs:
+            raise ValueError(f"no zone-map stats for z-order column {c!r}")
+        mm[c] = (min(mins), max(maxs))
+    keyed = df.withColumn("__z", _zorder_key(df, by, mm))
+    out = (keyed.repartitionByRange(n_frags, "__z")
+           .sortWithinPartitions("__z").drop("__z"))
+    return out, {"zorder": by}
+
+
+def _last_clustering_commit(path: str,
+                            storage: "dict | None" = None) -> "FR.Manifest | None":
+    """The most recent clustering commit of an emulated chain (its meta
+    is per-commit, so walk down from the head), or None when none
     survives (never clustered, or the manifests were vacuumed)."""
-    v = FR.latest_version(path)
+    v = FR.latest_version(path, storage)
     while v is not None and v >= 0:
         try:
-            m = FR.read_manifest(path, v)
+            m = FR.read_manifest(path, v, storage)
         except (FileNotFoundError, FR.LanceUnavailableError):
             break
         if "clustering" in m.meta:
-            return {f.file for f in m.fragments}
+            return m
         v -= 1
-    return set()
+    return None
+
+
+def _clustered_files(path: str, storage: "dict | None",
+                     manifest: FR.Manifest) -> set:
+    """Files of ``manifest`` that the last clustering pass produced."""
+    last = _last_clustering_commit(path, storage)
+    if last is None:
+        return set()
+    return {f.file for f in last.fragments} & {f.file for f in manifest.fragments}
 
 
 def _last_clustering_files_native(path: str,
                                   storage_options: dict | None = None) -> set:
-    """Native twin of ``_last_clustering_files``: the clustering meta
+    """Native twin of ``_last_clustering_commit``: the clustering meta
     rides in the table-config slot and CARRIES FORWARD, so the commit
     that introduced the head's current value is the lowest readable
     manifest still holding it — its fragment file set is the clustered
@@ -1628,32 +1515,25 @@ def _last_clustering_files_native(path: str,
 def _cluster_remote(spark: SparkSession, path: str, by: list[str],
                     target_rows: int, scope: str, zorder: bool,
                     s3) -> FR.Manifest:
-    """OPTIMIZE for an s3:// dataset (either backend): the rescan flows
-    through the file-attributed remote reader, ONE range exchange +
-    within-task sorts, tasks PUT the re-encoded fragments straight to
-    s3, and the shared rewrite tail commits under CAS with the
-    clustering meta recorded (manifest meta or the binary chain's
-    table-config slot). scope='tail' re-sorts only fragments appended
-    since the last clustering pass."""
+    """OPTIMIZE for an s3:// emulated dataset: the rescan flows through
+    the file-attributed remote reader, the shared clustering exchange
+    sorts it, tasks PUT the re-encoded fragments straight to s3, and
+    the shared rewrite tail commits under CAS with the clustering meta
+    recorded. scope='tail' re-sorts only fragments appended since the
+    last clustering pass."""
     import pyspark.sql.functions as F
 
     from .bloom import BLOOM_STATS_KEY
 
     storage = s3.to_storage_options() if s3 is not None else None
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
+    manifest = FR.read_manifest(path, storage_options=storage)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
     if not by:
         raise ValueError("cluster_dataset requires at least one column")
-    native = bool(manifest.meta.get("native_lance"))
     to_sort = list(manifest.fragments)
     if scope == "tail":
-        if native:
-            prev = {f"{FR.DATA_DIR}/{n}"
-                    for n in _last_clustering_files_native(path, storage)}
-        else:
-            prev = _last_clustering_files_remote(path, storage)
-        clustered = prev & {f.file for f in manifest.fragments}
+        clustered = _clustered_files(path, storage, manifest)
         to_sort = [f for f in manifest.fragments if f.file not in clustered]
         if not to_sort:
             return manifest  # nothing new since the last clustering pass
@@ -1662,24 +1542,9 @@ def _cluster_remote(spark: SparkSession, path: str, by: list[str],
           .filter(F.col("__frag").isin(*sort_files))
           .drop("__frag"))
     total = sum(f.row_count for f in to_sort)
-    n_frags = max(1, -(-total // target_rows))
-    if zorder and len(by) >= 2:
-        mm: dict[str, tuple] = {}
-        for c in by:
-            mins = [f.stats[c]["min"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("min") is not None]
-            maxs = [f.stats[c]["max"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("max") is not None]
-            if not mins or not maxs:
-                raise ValueError(f"no zone-map stats for z-order column {c!r}")
-            mm[c] = (min(mins), max(maxs))
-        keyed = df.withColumn("__z", _zorder_key(df, by, mm))
-        out = (keyed.repartitionByRange(n_frags, "__z")
-               .sortWithinPartitions("__z").drop("__z"))
-        layout = {"zorder": by}
-    else:
-        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
-        layout = {"cluster_by": by}
+    out, layout = _cluster_layout(df, by, zorder,
+                                  max(1, -(-total // target_rows)),
+                                  [f.stats for f in to_sort])
     bloom_cols = sorted({
         c for f in to_sort
         for c in ((f.stats or {}).get(BLOOM_STATS_KEY, {}).get("cols", {}))
@@ -1691,84 +1556,55 @@ def _cluster_remote(spark: SparkSession, path: str, by: list[str],
         bloom_cols=bloom_cols, max_rows=target_rows)
 
 
-def _last_clustering_files_remote(path: str, storage: dict | None) -> set:
-    """Emulated-chain remote twin of ``_last_clustering_files``."""
-    v = FR.latest_version(path, storage)
-    while v is not None and v >= 0:
-        try:
-            m = FR.read_manifest(path, v, storage_options=storage)
-        except (FileNotFoundError, FR.LanceUnavailableError):
-            break
-        if "clustering" in m.meta:
-            return {f.file for f in m.fragments}
-        v -= 1
-    return set()
-
-
 def _cluster_native(spark: SparkSession, path: str, by: list[str],
                     target_rows: int, scope: str = "full",
-                    zorder: bool = False):
-    """OPTIMIZE for a native dataset: one range exchange + within-task
-    sorts, re-encoded through the v2 codec, ONE overwrite commit under
-    CAS. The stats sidecar written with the commit records each sorted
+                    zorder: bool = False, storage: "dict | None" = None):
+    """OPTIMIZE for a native dataset: the shared clustering exchange,
+    re-encoded through the v2 codec, ONE overwrite commit under CAS. The
+    stats sidecar written with the commit records each sorted
     fragment's disjoint [min,max], so pushed range filters prune at
     planning time immediately after. scope='tail' re-sorts only the
     fragments appended since the last clustering pass (keyed on the
-    config-recorded clustering meta); zorder interleaves multi-column
-    bits exactly like the emulated path, with the bounds taken from the
+    config-recorded clustering meta); z-order bounds come from the
     native stats sidecar."""
     from . import lance_format as LF
     from .reader import read_native_files
     from .writer import _meta_to_config, produce_native_fragments
 
-    mf = LF.read_native_manifest(path)
+    mf = LF.read_native_manifest(path, storage_options=storage)
     if not mf.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
     if not by:
         raise ValueError("cluster_dataset requires at least one column")
-    stats = LF.read_native_stats(path, mf.version)
+    stats = LF.read_native_stats(path, mf.version, storage)
     carried: list = []
     to_sort = list(mf.fragments)
     if scope == "tail":
-        clustered = _last_clustering_files_native(path) & \
-            {fr.file for fr in mf.fragments}
+        clustered = (_last_clustering_files_native(path, storage)
+                     & {fr.file for fr in mf.fragments})
         carried = [fr for fr in mf.fragments if fr.file in clustered]
         to_sort = [fr for fr in mf.fragments if fr.file not in clustered]
         if not to_sort:
             return mf  # nothing new since the last clustering pass
     total = sum(fr.physical_rows for fr in to_sort)
-    n_frags = max(1, -(-total // target_rows))
     df = read_native_files(
         spark, mf.fields,
-        [os.path.join(path, LF.DATA_DIR, fr.file) for fr in to_sort],
-        deletions=LF.native_deletion_paths(path, mf))
-    if zorder and len(by) >= 2:
-        mm: dict[str, tuple] = {}
-        for c in by:
-            per = [stats.get(fr.file, {}).get(c) for fr in to_sort]
-            mins = [s["min"] for s in per if s and s.get("min") is not None]
-            maxs = [s["max"] for s in per if s and s.get("max") is not None]
-            if not mins or not maxs:
-                raise ValueError(f"no zone-map stats for z-order column {c!r}")
-            mm[c] = (min(mins), max(maxs))
-        keyed = df.withColumn("__z", _zorder_key(df, by, mm))
-        out = (keyed.repartitionByRange(n_frags, "__z")
-               .sortWithinPartitions("__z").drop("__z"))
-        layout = {"zorder": by}
-    else:
-        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
-        layout = {"cluster_by": by}
-    new = produce_native_fragments(out, path, LF.arrow_schema_of(mf.fields),
-                                   target_rows,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in carried] + new
+        [f"{path}/{LF.DATA_DIR}/{fr.file}" for fr in to_sort],
+        deletions=LF.native_deletion_paths(path, mf),
+        storage_options=storage)
+    out, layout = _cluster_layout(df, by, zorder,
+                                  max(1, -(-total // target_rows)),
+                                  [stats.get(fr.file) for fr in to_sort])
+    new = produce_native_fragments(
+        out, path, LF.arrow_schema_of(mf.fields), target_rows,
+        bloom_columns=_native_bloom_columns(path, mf, storage) or None,
+        storage_options=storage)
     meta = {"clustering": {**layout, "base_version": mf.version,
                            "scope": scope}}
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version,
-                            config=_meta_to_config(meta))
+    return LF.commit_native(path, mf.fields, _carried(carried) + new,
+                            "overwrite", expected_base_version=mf.version,
+                            config=_meta_to_config(meta),
+                            storage_options=storage)
 
 
 def cluster_dataset(
@@ -1811,15 +1647,13 @@ def cluster_dataset(
     """
     if scope not in ("full", "tail"):
         raise ValueError("scope must be 'full' or 'tail'")
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    if is_remote(path):
+    root, storage, plane = _plane(path, s3)
+    if plane == "native":
+        return _cluster_native(spark, root, by, target_rows_per_fragment,
+                               scope=scope, zorder=zorder, storage=storage)
+    if plane == "remote":
         return _cluster_remote(spark, path, by, target_rows_per_fragment,
                                scope, zorder, s3)
-    if LF.is_native_dataset(path):
-        return _cluster_native(spark, path, by, target_rows_per_fragment,
-                               scope=scope, zorder=zorder)
     manifest = FR.read_manifest(path)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
@@ -1828,36 +1662,19 @@ def cluster_dataset(
     carried: list[FR.FragmentInfo] = []
     to_sort = manifest.fragments
     if scope == "tail":
-        clustered = _last_clustering_files(path) & {f.file for f in manifest.fragments}
+        clustered = _clustered_files(path, None, manifest)
         carried = [f for f in manifest.fragments if f.file in clustered]
         to_sort = [f for f in manifest.fragments if f.file not in clustered]
         if not to_sort:
             return manifest  # nothing new since the last clustering pass
     total = sum(f.row_count for f in to_sort)
-    n_frags = max(1, -(-total // target_rows_per_fragment))
     from .reader import read_fragment_files
 
     df = read_fragment_files(spark, manifest,
                              [os.path.join(path, f.file) for f in to_sort])
-
-    if zorder and len(by) >= 2:
-        mm: dict[str, tuple] = {}
-        for c in by:
-            mins = [f.stats[c]["min"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("min") is not None]
-            maxs = [f.stats[c]["max"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("max") is not None]
-            if not mins or not maxs:
-                raise ValueError(f"no zone-map stats for z-order column {c!r}")
-            mm[c] = (min(mins), max(maxs))
-        keyed = df.withColumn("__z", _zorder_key(df, by, mm))
-        out = (keyed.repartitionByRange(n_frags, "__z")
-               .sortWithinPartitions("__z").drop("__z"))
-        layout = {"zorder": by}
-    else:
-        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
-        layout = {"cluster_by": by}
-
+    out, layout = _cluster_layout(
+        df, by, zorder, max(1, -(-total // target_rows_per_fragment)),
+        [f.stats for f in to_sort])
     stage = os.path.join(path, f"_cluster-{uuid.uuid4().hex}")
     try:
         (out.write.option("maxRecordsPerFile", target_rows_per_fragment)
@@ -1876,263 +1693,51 @@ def cluster_dataset(
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def _describe_native(path: str) -> dict:
-    """DESCRIBE for a REAL Lance binary dataset (stdlib codec): same key
-    shape as the emulated report so callers need no format branch.
-    Auxiliary structures (ANN/FTS indexes, rollups, blooms, clustering)
-    are parquet-backend constructs — reported empty, not unknown."""
-    from . import lance_format as LF
-
-    mf = LF.read_native_manifest(path)
-    data_dir = os.path.join(path, LF.DATA_DIR)
-    size = sum(
-        os.path.getsize(os.path.join(data_dir, fr.file))
-        for fr in mf.fragments
-        if os.path.exists(os.path.join(data_dir, fr.file))
-    )
-    return {
-        "path": os.path.abspath(path),
-        "version": mf.version,
-        "versions": LF.native_manifest_versions(path),
-        "num_fragments": len(mf.fragments),
-        "num_rows": mf.row_count,
-        # deletion-vector tombstones awaiting materialization: the
-        # compaction-debt signal (num_rows already excludes them)
-        "tombstoned_rows": sum((fr.deletion or {}).get("num_deleted", 0)
-                               for fr in mf.fragments),
-        "size_bytes": size,
-        "schema_columns": sorted(f.name for f in mf.fields if f.parent == -1) or None,
-        "bloom": None,
-        "indexes": [],
-        "fts": [],
-        "rollups": [],
-        "clustering": None,
-        "native_format": {"writer_version": mf.writer_version,
-                          "data_format": mf.data_format},
-    }
-
-
-def _describe_remote(path: str, storage: "dict | None") -> dict:
-    """DESCRIBE for an s3:// dataset (either backend) — manifest +
-    key-listing IO only, same key shape as the local report. Versions,
-    row/byte counts, schema, bloom coverage (it rides the manifest's
-    stats sidecar), clustering staleness, and ROLLUP + FTS + ANN
-    staleness (all three states are themselves datasets under
-    ``_rollups/`` / ``_indexes/<col>/<kind>`` — one listing + manifest
-    reads each) are all fs-plane derivable."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_STATS_KEY
-    from .fs import get_fs, remote_ls_names
-
-    fs = get_fs(path, storage)
-    base = str(path).rstrip("/")
-    names = remote_ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
-    native = any(n.endswith(".manifest") for n in names)
-    if native:
-        mf = LF.read_native_manifest(base, None, storage)
-        versions = sorted(int(n.split(".")[0]) for n in names
-                          if n.endswith(".manifest"))
-        frag_files = [fr.file for fr in mf.fragments]
-        num_rows = mf.row_count
-        version = mf.version
-        cols = sorted(f.name for f in mf.fields if f.parent == -1)
-        stats_map = LF.read_native_stats(base, mf.version, storage)
-        frag_stats = [stats_map.get(f) for f in frag_files]
-        clustering_meta = FR.native_config_meta(mf).get("clustering")
-    else:
-        manifest = FR.read_manifest(path, storage_options=storage)
-        versions = sorted(int(n.split(".")[0]) for n in names
-                          if n.endswith(".manifest.json"))
-        frag_files = [fr.file for fr in manifest.fragments]
-        num_rows = manifest.row_count
-        version = manifest.version
-        sj = manifest.meta.get("schema")
-        if sj:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            cols = sorted(StructType.fromJson(_json.loads(sj)).names)
-        else:
-            cols = sorted({c for fr in manifest.fragments
-                           for c in (fr.stats or {})}) or None
-        frag_stats = [fr.stats for fr in manifest.fragments]
-        # emulated meta is per-commit (only schema/rollup/fts inherit):
-        # walk down for the newest clustering commit, like the local path
-        clustering_meta = None
-        v = version
-        while v >= 0 and clustering_meta is None:
-            try:
-                clustering_meta = FR.read_manifest(
-                    path, v, storage_options=storage).meta.get("clustering")
-            except (FileNotFoundError, FR.LanceUnavailableError):
-                break
-            v -= 1
-
-    bloom_cols: set = set()
-    bloom_frags = 0
-    for st in frag_stats:
-        entry = (st or {}).get(BLOOM_STATS_KEY)
-        if entry:
-            bloom_frags += 1
-            bloom_cols |= set(entry.get("cols", {}))
-
-    clustering = None
-    if clustering_meta is not None:
-        if isinstance(clustering_meta, str):
-            import json as _json
-
-            clustering_meta = _json.loads(clustering_meta)
-        if native:
-            cl_files = _last_clustering_files_native(base, storage)
-            rows_by = {fr.file: fr.physical_rows for fr in mf.fragments}
-        else:
-            cl_files = _last_clustering_files_remote(path, storage)
-            rows_by = {fr.file: fr.row_count for fr in manifest.fragments}
-        tail = sum(r for f, r in rows_by.items() if f not in cl_files)
-        clustering = {**clustering_meta, "unclustered_rows": tail}
-
-    data_prefix = f"{base}/{LF.DATA_DIR}" if native else base
-    size = 0
-    for f in frag_files:
-        try:
-            size += int(fs.info(f"{data_prefix}/{f}").get("size", 0) or 0)
-        except (OSError, KeyError, AttributeError):
-            pass
-
-    # rollup state is itself a dataset under the same key prefix, so a
-    # remote describe CAN enumerate it (one listing + manifest reads) —
-    # unlike ANN/FTS indexes, which stay local-checkout structures
-    from .rollup import ROLLUPS_DIR, rollup_status
-
-    rollups = []
-    try:
-        r_names = sorted({n.split("/")[0] for n in
-                          remote_ls_names(fs, f"{base}/{ROLLUPS_DIR}")})
-    except (OSError, FileNotFoundError):
-        r_names = []
-    for rname in r_names:
-        try:
-            rollups.append(rollup_status(base, rname,
-                                         storage_options=storage))
-        except (ValueError, FileNotFoundError):
-            continue  # not a rollup dir (partial write, foreign key)
-
-    # FTS postings AND ANN index relations are datasets under
-    # _indexes/<col>/<kind> — staleness is manifest-derivable remotely,
-    # same covered-file bookkeeping as local (ANN meta rides the kind's
-    # primary relation's commit: graph/codebooks/centroids)
-    from ..index import INDEXES_DIR, _idx_meta_remote
-
-    fts_indexes = []
-    ann_indexes = []
-    try:
-        idx_cols = sorted({n.split("/")[0] for n in
-                           remote_ls_names(fs, f"{base}/{INDEXES_DIR}")})
-    except (OSError, FileNotFoundError):
-        idx_cols = []
-    if idx_cols:
-        cur_m = FR.read_manifest_compat(base, storage_options=storage)
-        cur_files = {f.file for f in cur_m.fragments}
-        rows_by = {f.file: f.row_count for f in cur_m.fragments}
-        for column in idx_cols:
-            try:
-                info = FR.read_manifest(
-                    f"{base}/{INDEXES_DIR}/{column}/fts", None, storage
-                ).meta.get("fts")
-            except (FileNotFoundError, FR.LanceUnavailableError):
-                info = None  # ANN-only column dir, or partial write
-            if info:
-                covered = set(info["covered_files"])
-                fts_indexes.append({
-                    "column": column,
-                    "built_at_version": info["source_version"],
-                    "n_docs": info["n_docs"],
-                    "pending_rows": sum(rows_by[f]
-                                        for f in cur_files - covered),
-                    "needs_full": bool(covered - cur_files),
-                })
-            for kind, rel in (("hnsw", "graph"), ("pq", "codebooks"),
-                              ("ivf", "centroids")):
-                meta = _idx_meta_remote(
-                    f"{base}/{INDEXES_DIR}/{column}/{kind}/{rel}", storage)
-                if meta is None:
-                    continue
-                built_at = meta.get("dataset_version", 0)
-                try:
-                    built_files = {f.file for f in FR.read_manifest_compat(
-                        base, built_at, storage_options=storage).fragments}
-                except (FileNotFoundError, FR.LanceUnavailableError):
-                    built_files = set()
-                stale_rows = sum(rows_by[f]
-                                 for f in cur_files - built_files)
-                ann_indexes.append({
-                    "column": column,
-                    "type": meta.get("index_type", kind),
-                    "metric": meta.get("metric"),
-                    "built_at_version": built_at,
-                    "unindexed_rows": stale_rows,
-                })
-
-    return {
-        "path": base,
-        "version": version,
-        "versions": versions,
-        "num_fragments": len(frag_files),
-        "num_rows": num_rows,
-        "tombstoned_rows": (sum((fr.deletion or {}).get("num_deleted", 0)
-                                for fr in mf.fragments) if native else 0),
-        "size_bytes": size,
-        "schema_columns": cols or None,
-        "bloom": {"columns": sorted(bloom_cols),
-                  "fragments_covered": bloom_frags} if bloom_cols else None,
-        # ANN/FTS/rollup structures are all datasets under the table's
-        # key prefix — a remote describe enumerates them like local
-        "indexes": ann_indexes,
-        "fts": fts_indexes,
-        "rollups": rollups,
-        "clustering": clustering,
-    }
-
-
 def describe_dataset(path: str, storage_options: "dict | None" = None) -> dict:
     """One-call metadata report for a dataset — zero data IO.
 
     The operational `DESCRIBE EXTENDED` a table owner actually needs at
     100 TB: what versions exist, how much lives in the current one, what
-    auxiliary structures (ANN indexes, rollups, bloom sidecars,
-    clustering layout) are present and how stale each is. Everything
-    comes from manifests, index/rollup metadata files, and directory
-    listings — no Spark session, no file scans. s3:// datasets report
-    the same facts over fsspec (versions, rows, bytes, schema, bloom
-    coverage, clustering staleness, rollup + FTS + ANN staleness — the
-    index states are themselves datasets under the table's key prefix).
+    auxiliary structures (ANN indexes, FTS postings, rollups, bloom
+    sidecars, clustering layout) are present and how stale each is.
+    Everything comes from manifests, index/rollup metadata and key
+    listings through the filesystem seam — no Spark session, no file
+    scans — so local and s3:// datasets of either format report the
+    same key set (``tombstoned_rows`` is 0 and ``native_format`` None on
+    the emulated format). The index and rollup states are themselves
+    datasets under the table's prefix, enumerated the same way
+    everywhere.
     """
-    from .fs import is_remote
-
-    if is_remote(path):
-        return _describe_remote(path, storage_options)
     import json
 
-    from ..index import INDEXES_DIR
+    from ..index import INDEXES_DIR, _kind_metas
     from .bloom import BLOOM_STATS_KEY
+    from .fs import dataset_root, get_fs, ls_names
     from .rollup import ROLLUPS_DIR, rollup_status
 
-    from . import lance_format as LF
-
-    if LF.is_native_dataset(path):
-        return _describe_native(path)
-    latest = FR.latest_version(path)
-    if latest is None:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
-    manifest = FR.read_manifest(path)
+    storage = storage_options
+    fs = get_fs(path, storage)
+    base = dataset_root(path)
+    manifest = FR.read_manifest_compat(base, storage_options=storage)
+    native = bool(manifest.meta.get("native_lance"))
     versions = sorted(
-        int(name.split(".")[0])
-        for name in os.listdir(os.path.join(path, FR.VERSIONS_DIR))
-        if name.endswith(".manifest.json") or name.endswith(".manifest")
-    )
+        int(n.split(".")[0])
+        for n in ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
+        if n.endswith(".manifest.json") or n.endswith(".manifest"))
+    rows_by = {f.file: f.row_count for f in manifest.fragments}
+    cur_files = set(rows_by)
 
-    bloom_cols: set[str] = set()
+    if native:
+        cols = [f.name for f in manifest.meta["native_fields"] if f.parent == -1]
+    elif manifest.meta.get("schema"):
+        from pyspark.sql.types import StructType
+
+        cols = StructType.fromJson(json.loads(manifest.meta["schema"])).names
+    else:  # pre-schema commits: the zone-mapped columns
+        cols = [c for f in manifest.fragments for c in (f.stats or {})
+                if not c.startswith("__")]
+
+    bloom_cols: set = set()
     bloom_frags = 0
     for f in manifest.fragments:
         entry = (f.stats or {}).get(BLOOM_STATS_KEY)
@@ -2140,98 +1745,81 @@ def describe_dataset(path: str, storage_options: "dict | None" = None) -> dict:
             bloom_frags += 1
             bloom_cols |= set(entry.get("cols", {}))
 
-    indexes = []
+    # FTS postings AND ANN index relations live under _indexes/<col>/;
+    # staleness is the same covered-file bookkeeping for both
     fts_indexes = []
-    idx_root = os.path.join(path, INDEXES_DIR)
-    if os.path.isdir(idx_root):
-        for column in sorted(os.listdir(idx_root)):
-            for kind in sorted(os.listdir(os.path.join(idx_root, column))):
-                if kind == "fts":
-                    # FTS postings live as their own fragment dataset with
-                    # rollup-style covered-file bookkeeping (sources/fts.py)
-                    try:
-                        info = FR.read_manifest(
-                            os.path.join(idx_root, column, "fts")
-                        ).meta.get("fts")
-                    except (FileNotFoundError, FR.LanceUnavailableError):
-                        info = None
-                    if info:
-                        covered = set(info["covered_files"])
-                        cur = {f.file for f in manifest.fragments}
-                        rows_by = {f.file: f.row_count for f in manifest.fragments}
-                        fts_indexes.append({
-                            "column": column,
-                            "built_at_version": info["source_version"],
-                            "n_docs": info["n_docs"],
-                            "pending_rows": sum(rows_by[f] for f in cur - covered),
-                            "needs_full": bool(covered - cur),
-                        })
-                    continue
-                meta_p = os.path.join(idx_root, column, kind, "index_meta.json")
-                if not os.path.exists(meta_p):
-                    continue
-                with open(meta_p) as fh:
-                    meta = json.load(fh)
-                built_at = meta.get("dataset_version", 0)
-                built_files: set[str] = set()
-                try:
-                    built_files = {f.file for f in FR.read_manifest(path, built_at).fragments}
-                except (FileNotFoundError, FR.LanceUnavailableError):
-                    pass
-                cur_files = {f.file for f in manifest.fragments}
-                covered = built_files & cur_files
-                rows_by_file = {f.file: f.row_count for f in manifest.fragments}
-                stale_rows = sum(rows_by_file[f] for f in cur_files - covered)
-                indexes.append({
-                    "column": column,
-                    "type": meta.get("index_type", kind),
-                    "metric": meta.get("metric"),
-                    "built_at_version": built_at,
-                    "unindexed_rows": stale_rows,
-                })
-
-    rollups = []
-    r_root = os.path.join(path, ROLLUPS_DIR)
-    if os.path.isdir(r_root):
-        for name in sorted(os.listdir(r_root)):
+    ann_indexes = []
+    for column in ls_names(fs, f"{base}/{INDEXES_DIR}"):
+        try:
+            info = FR.read_manifest(f"{base}/{INDEXES_DIR}/{column}/fts",
+                                    None, storage).meta.get("fts")
+        except (FileNotFoundError, FR.LanceUnavailableError):
+            info = None  # ANN-only column dir, or partial write
+        if info:
+            covered = set(info["covered_files"])
+            fts_indexes.append({
+                "column": column,
+                "built_at_version": info["source_version"],
+                "n_docs": info["n_docs"],
+                "pending_rows": sum(rows_by[f] for f in cur_files - covered),
+                "needs_full": bool(covered - cur_files),
+            })
+        for kind, meta in sorted(_kind_metas(base, column, storage).items()):
+            built_at = meta.get("dataset_version", 0)
             try:
-                st = rollup_status(path, name)
-            except (FileNotFoundError, ValueError):
-                continue
-            rollups.append({
-                "name": name,
-                "group_cols": st["group_cols"],
-                "pending_rows": st["pending_rows"],
-                "needs_full": st["needs_full"],
+                built_files = {f.file for f in FR.read_manifest_compat(
+                    base, built_at, storage_options=storage).fragments}
+            except (FileNotFoundError, FR.LanceUnavailableError):
+                built_files = set()
+            ann_indexes.append({
+                "column": column,
+                "type": meta.get("index_type", kind),
+                "metric": meta.get("metric"),
+                "built_at_version": built_at,
+                "unindexed_rows": sum(rows_by[f]
+                                      for f in cur_files - built_files),
             })
 
-    clustering = None
-    cl_files = _last_clustering_files(path)
-    v = latest
-    while v is not None and v >= 0 and clustering is None:
+    rollups = []
+    for name in ls_names(fs, f"{base}/{ROLLUPS_DIR}"):
         try:
-            m = FR.read_manifest(path, v)
-        except (FileNotFoundError, FR.LanceUnavailableError):
-            break
-        if "clustering" in m.meta:
-            tail = [f for f in manifest.fragments if f.file not in cl_files]
-            clustering = {**m.meta["clustering"],
-                          "unclustered_rows": sum(f.row_count for f in tail)}
-        v -= 1
+            rollups.append(rollup_status(base, name, storage_options=storage))
+        except (ValueError, FileNotFoundError):
+            continue  # not a rollup dir (partial write, foreign key)
 
-    stats = table_statistics(path)
+    if native:
+        from . import lance_format as LF
+
+        cl_meta = manifest.meta.get("clustering")
+        cl_files = ({f"{LF.DATA_DIR}/{n}" for n in
+                     _last_clustering_files_native(base, storage)}
+                    if cl_meta is not None else set())
+    else:
+        cl_commit = _last_clustering_commit(base, storage)
+        cl_meta = cl_commit.meta["clustering"] if cl_commit else None
+        cl_files = {f.file for f in cl_commit.fragments} if cl_commit else set()
+    clustering = None
+    if cl_meta is not None:
+        clustering = {**cl_meta, "unclustered_rows": sum(
+            r for f, r in rows_by.items() if f not in cl_files)}
+
     return {
-        "path": os.path.abspath(path),
+        "path": base,
         "version": manifest.version,
         "versions": versions,
-        "num_fragments": stats["num_fragments"],
-        "num_rows": stats["num_rows"],
-        "size_bytes": stats["size_bytes"],
-        "schema_columns": sorted(stats["columns"]) or None,
+        "num_fragments": len(manifest.fragments),
+        "num_rows": manifest.row_count,
+        # deletion-vector tombstones awaiting materialization: the
+        # compaction-debt signal (num_rows already excludes them)
+        "tombstoned_rows": sum((f.deletion or {}).get("num_deleted", 0)
+                               for f in manifest.fragments),
+        "size_bytes": _sizes(fs, base, [f.file for f in manifest.fragments]),
+        "schema_columns": sorted(set(cols)) or None,
         "bloom": {"columns": sorted(bloom_cols),
                   "fragments_covered": bloom_frags} if bloom_cols else None,
-        "indexes": indexes,
+        "indexes": ann_indexes,
         "fts": fts_indexes,
         "rollups": rollups,
         "clustering": clustering,
+        "native_format": manifest.meta.get("native_format"),
     }

@@ -92,9 +92,9 @@ def commit_epoch(batch_df: DataFrame, epoch_id: int, path: str,
 
         s3 = options.s3 if options is not None else None
         if is_remote(path):
-            from ..sources.fs import get_fs, remote_ls_names
+            from ..sources.fs import get_fs, ls_names
 
-            names = sorted({n.split("/")[0] for n in remote_ls_names(
+            names = sorted({n.split("/")[0] for n in ls_names(
                 get_fs(path, storage),
                 f"{str(path).rstrip('/')}/{ROLLUPS_DIR}")})
         else:
@@ -117,12 +117,12 @@ def commit_epoch(batch_df: DataFrame, epoch_id: int, path: str,
         s3 = options.s3 if options is not None else None
         if is_remote(path):
             from ..sources import fragments as _FR
-            from ..sources.fs import get_fs, remote_ls_names
+            from ..sources.fs import get_fs, ls_names
 
             base = str(path).rstrip("/")
             fs = get_fs(path, storage)
             for col in sorted({n.split("/")[0] for n in
-                               remote_ls_names(fs, f"{base}/_indexes")}):
+                               ls_names(fs, f"{base}/_indexes")}):
                 try:
                     _FR.read_manifest(f"{base}/_indexes/{col}/fts",
                                       None, storage)
